@@ -4,7 +4,8 @@
 # Usage: scripts/preflight.sh [q_names]
 #   q_names  optional comma-separated query list (e.g. "q237,q238") to
 #            smoke through graft.Verify + scripts/check.py at sf0.001.
-#            Without it, only compilation (main + test) is checked.
+#            Without it, only compilation (main + test) and the
+#            benchmark's statistics tests are checked.
 #
 # Exit code 0 = safe to commit/pause; anything else = fix first.
 set -euo pipefail
@@ -14,6 +15,12 @@ echo "== preflight: sbt Test/compile =="
 sbt -batch "Test/compile" > /tmp/preflight_compile.log 2>&1 || {
   tail -30 /tmp/preflight_compile.log
   echo "PREFLIGHT FAIL: compile"; exit 1
+}
+
+echo "== preflight: benchmark statistics tests =="
+python3 -m unittest discover graftbench > /tmp/preflight_bench_stats.log 2>&1 || {
+  tail -30 /tmp/preflight_bench_stats.log
+  echo "PREFLIGHT FAIL: graftbench unittest"; exit 1
 }
 
 if [[ $# -ge 1 && -n "${1:-}" ]]; then

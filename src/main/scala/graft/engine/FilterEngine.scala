@@ -174,11 +174,35 @@ object FilterEngine {
     "moving_rms", "absolute", "interpolate", "resample")
 
   /** Apply `spec` to each channel in place (out column = channel),
-    * optionally scoped to a `[start, end]` time selection.
+    * optionally scoped to a `[start, end]` time selection. Channels are
+    * applied in list order, as a fold would; two specs are applied to
+    * all channels at once instead:
+    *  - whole-series Savitzky–Golay smooths every channel in one
+    *    projection (one pass per repeat of a listed channel, so a
+    *    duplicate smooths again exactly as the fold did);
+    *  - resample interpolates every listed channel onto ONE shared
+    *    grid, like the reference's resample of all numeric columns
+    *    (filter_engine.py:148-170) — the frame becomes series keys,
+    *    grid time and the channels.
     */
   def apply(spark: SparkSession, df: DataFrame, s: Series, channels: Seq[String],
-      spec: FilterSpec, selection: Option[(Double, Double)] = None): DataFrame =
-    channels.foldLeft(df)((d, ch) => applyOne(spark, d, s, ch, spec, selection))
+      spec: FilterSpec, selection: Option[(Double, Double)] = None): DataFrame = {
+    import FilterSpec._
+    (spec, selection) match {
+      case (Savgol(w, p), None) =>
+        Iterator.iterate(channels)(cs => cs.diff(cs.distinct)).takeWhile(_.nonEmpty)
+          .foldLeft(df)((d, cs) => SeriesOps.savgolChannels(d, s, cs.distinct.map(c => c -> c), w, p))
+      case (ResampleTo(step), None) =>
+        Resample.resampleFrame(df, s, channels.distinct, Nil, Nil, step)
+      case (ResampleAuto, None) =>
+        // the trial's inferred rate, one scalar agg at execution
+        // (reference default: params.get('target_fs', self.sample_rate))
+        val fs = graft.sources.TrialReader.inferSampleRate(df, s.timeCol)
+        Resample.resampleFrame(df, s, channels.distinct, Nil, Nil, 1.0 / fs)
+      case _ =>
+        channels.foldLeft(df)((d, ch) => applyOne(spark, d, s, ch, spec, selection))
+    }
+  }
 
   private def applyOne(spark: SparkSession, df: DataFrame, s: Series, ch: String,
       spec: FilterSpec, selection: Option[(Double, Double)]): DataFrame =
@@ -239,14 +263,10 @@ object FilterEngine {
         withSrc(df, s, src, out)(SignalKernels.butterLowpassHz(spark, _, s, _, _, ord, hz))
       case ButterBandpassHz(lo, hi, ord) =>
         withSrc(df, s, src, out)(SignalKernels.butterBandpassHz(spark, _, s, _, _, ord, lo, hi))
-      case ResampleTo(step) =>
-        // cardinality-changing: replaces the frame with the new grid
-        Resample.toUniformGrid(df, s, src, out, step)
-      case ResampleAuto =>
-        // the trial's inferred rate, one scalar agg at execution
-        // (reference default: params.get('target_fs', self.sample_rate))
-        val fs = graft.sources.TrialReader.inferSampleRate(df, s.timeCol)
-        Resample.toUniformGrid(df, s, src, out, 1.0 / fs)
+      case ResampleTo(_) | ResampleAuto =>
+        // whole-series resample never reaches here (see apply)
+        throw new IllegalArgumentException(
+          "resample replaces the whole series' time grid; it cannot be scoped to a selection")
     }
   }
 

@@ -2,7 +2,7 @@ package graft.engine
 
 import graft.operators.SeriesOps
 import graft.operators.SeriesOps.Series
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge}
 import org.apache.spark.sql.functions._
 
 /** Labeled interval on a series' time axis
@@ -18,10 +18,10 @@ final case class OpRecord(description: String, params: Map[String, String],
     start: Double, end: Double)
 
 /** Immutable session state — the reference's `DataModel` mutable
-  * state (/root/reference/data_model.py:46-59) as a value. DataFrames
-  * are lazy/immutable, so "snapshots" are just references: undo/redo
-  * (/root/reference/data_model.py:131-165) costs O(1) instead of the
-  * reference's full deep copy per operation (README.md:321).
+  * state (reference data_model.py:46-59) as a value. Undo/redo
+  * (data_model.py:131-165) swaps state references, so it costs O(1);
+  * [[Session]] materializes the frame of every state whose data an
+  * edit changes.
   */
 final case class EngineState(
     df: DataFrame,
@@ -32,6 +32,21 @@ final case class EngineState(
 /** Undo/redo session over [[EngineState]]
   * (/root/reference/data_model.py:131-165): push-state-then-mutate,
   * with the redo stack cleared on every new mutation.
+  *
+  * Every edit that changes the data (`deleteSegment`, `markBad`,
+  * `applyDataFrame`) stores a lazy `localCheckpoint` of its result, so
+  * the next edit and every render scan the previous state's cached rows
+  * (computed by the state's first action) instead of replaying load →
+  * filter → every earlier edit: plan size stays flat with edit depth.
+  * `annotate` shares the frame and materializes nothing; streaming
+  * frames are never checkpointed.
+  *
+  * Memory is one cached copy of the trial per reachable state, as with
+  * the reference's deep copy per operation. A mutation that clears the
+  * redo stack releases each dropped frame that the current state and the
+  * undo stack no longer share (by reference, via `annotate`); a released
+  * frame must not be read again. Checkpointed rows live only in executor
+  * block managers and do not survive executor loss.
   */
 final class Session(s: Series, initial: EngineState) {
   private var current: EngineState = initial
@@ -43,10 +58,33 @@ final class Session(s: Series, initial: EngineState) {
   def canRedo: Boolean = redoStack.nonEmpty
 
   private def mutate(next: EngineState): EngineState = {
+    val dropped = redoStack
     undoStack = current :: undoStack
     redoStack = Nil
     current = next
+    release(dropped)
     current
+  }
+
+  /** `next` with its frame cut from its lineage; the checkpoint is
+    * lazy, so the state's first action computes and caches its rows.
+    */
+  private def materialized(next: EngineState): EngineState =
+    if (next.df.isStreaming) next
+    else next.copy(df = next.df.localCheckpoint(eager = false))
+
+  /** Unpersist the checkpoint RDD of each dropped frame that no
+    * reachable state still holds.
+    */
+  private def release(dropped: List[EngineState]): Unit = {
+    val live = current :: undoStack
+    dropped.map(_.df)
+      .filterNot(d => live.exists(_.df eq d))
+      .foreach { d =>
+        GraftExpressionBridge.checkpointedRddId(d)
+          .flatMap(d.sparkSession.sparkContext.getPersistentRDDs.get)
+          .foreach(_.unpersist(blocking = false))
+      }
   }
 
   def undo(): Boolean = undoStack match {
@@ -61,18 +99,18 @@ final class Session(s: Series, initial: EngineState) {
 
   /** R2 delete + collapse, logged (/root/reference/data_model.py:170-194). */
   def deleteSegment(start: Double, end: Double): EngineState =
-    mutate(current.copy(
+    mutate(materialized(current.copy(
       df = SeriesOps.deleteCollapse(current.df, s, start, end),
       deletions = current.deletions :+ ((start, end)),
       history = current.history :+ OpRecord("delete_segment",
-        Map("start" -> start.toString, "end" -> end.toString), start, end)))
+        Map("start" -> start.toString, "end" -> end.toString), start, end))))
 
   /** R3 mark-bad, logged (/root/reference/data_model.py:196-206). */
   def markBad(start: Double, end: Double): EngineState =
-    mutate(current.copy(
+    mutate(materialized(current.copy(
       df = SeriesOps.markBad(current.df, s, start, end),
       history = current.history :+ OpRecord("mark_bad",
-        Map("start" -> start.toString, "end" -> end.toString), start, end)))
+        Map("start" -> start.toString, "end" -> end.toString), start, end))))
 
   /** Add an annotation (/root/reference/data_model.py:208-218). */
   def annotate(a: Annotation): EngineState =
@@ -83,9 +121,9 @@ final class Session(s: Series, initial: EngineState) {
     */
   def applyDataFrame(df: DataFrame, description: String,
       params: Map[String, String] = Map.empty): EngineState =
-    mutate(current.copy(df = df,
+    mutate(materialized(current.copy(df = df,
       history = current.history :+ OpRecord(description, params,
-        Double.NaN, Double.NaN)))
+        Double.NaN, Double.NaN))))
 
   /** The reference's `_annotation_at_time` point lookup
     * (/root/reference/main.py:1052-1057): ties broken by non-episode

@@ -290,19 +290,33 @@ object SeriesOps {
     * fit lives in the [[SignalKernels]] path).
     */
   def savgolInterior(df: DataFrame, s: Series, value: String, out: String,
+      window: Int = 11, polyorder: Int = 2): DataFrame =
+    savgolChannels(df, s, Seq(value -> out), window, polyorder)
+
+  /** [[savgolInterior]] for several `(value, out)` pairs in ONE
+    * projection: every channel shares the same ordered and whole-series
+    * windows, so the plan has two `Window` operators whatever the
+    * channel count. Out names must be distinct; each pair reads its
+    * value column as it was before this call.
+    */
+  def savgolChannels(df: DataFrame, s: Series, pairs: Seq[(String, String)],
       window: Int = 11, polyorder: Int = 2): DataFrame = {
     val coefs = Dsp.savgolCoefficients(window, polyorder)
     val h = window / 2
-    val fir = coefs.zipWithIndex.map { case (c, i) =>
-      val off = i - h
-      val term = if (off < 0) lag(col(value), -off).over(s.ordered)
-                 else if (off > 0) lead(col(value), off).over(s.ordered)
-                 else col(value)
-      lit(c) * term
-    }.reduceLeft(_ + _)
     val rn = row_number().over(s.ordered)
     val n = count(lit(1)).over(s.whole)
-    df.withColumn(out, when(rn > h && rn <= n - h, fir).otherwise(col(value)))
+    def smoothed(value: String): Column = {
+      val fir = coefs.zipWithIndex.map { case (c, i) =>
+        val off = i - h
+        val term = if (off < 0) lag(col(value), -off).over(s.ordered)
+                   else if (off > 0) lead(col(value), off).over(s.ordered)
+                   else col(value)
+        lit(c) * term
+      }.reduceLeft(_ + _)
+      when(rn > h && rn <= n - h, fir).otherwise(col(value))
+    }
+    df.withColumns(scala.collection.immutable.ListMap(
+      pairs.map { case (value, out) => out -> smoothed(value) }: _*))
   }
 
   // ---------------------------------------------------------------

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, NumericType, StringType}
+import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
 
 /** Trial ingest — the reference's CSV load + heuristic schema
   * classification pipeline (S1–S4, S9 in SURVEY.md §2.1):
@@ -30,13 +30,14 @@ object TrialReader {
       .option("inferSchema", true)
       .option("nanValue", "nan")
       .csv(paths: _*)
-    raw.schema.fields.foldLeft(raw) {
-      case (df, f) if f.dataType == org.apache.spark.sql.types.DoubleType ||
-          f.dataType == org.apache.spark.sql.types.FloatType =>
-        df.withColumn(f.name,
-          when(isnan(col(s"`${f.name}`")), lit(null)).otherwise(col(s"`${f.name}`")))
-      case (df, _) => df
-    }
+    // one projection, not one withColumn (and one analysis) per column
+    raw.select(raw.schema.fields.toSeq.map { f =>
+      val c = col(s"`${f.name}`")
+      f.dataType match {
+        case DoubleType | FloatType => when(isnan(c), lit(null)).otherwise(c).as(f.name)
+        case _ => c
+      }
+    }: _*)
   }
 
   /** S9: multi-trial overlay read — N trial files stacked with a
@@ -93,11 +94,10 @@ object TrialReader {
     val dts = df
       .withColumn("__dt", col(timeCol) - lag(col(timeCol), 1).over(w))
       .filter(col("__dt") > 0)
-    if (dts.isEmpty) 120.0
-    else {
-      val med = dts.agg(percentile(col("__dt"), lit(0.5))).head().getDouble(0)
-      if (med > 0) math.rint(100.0 / med) / 100.0 else 120.0
-    }
+    // one job: the median of no deltas is null, which falls back too
+    val row = dts.agg(percentile(col("__dt"), lit(0.5))).head()
+    val med = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
+    if (med > 0) math.rint(100.0 / med) / 100.0 else 120.0
   }
 
   /** S4, multi-trial batch: the reference infers fs PER TRIAL

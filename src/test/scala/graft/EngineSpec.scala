@@ -231,6 +231,76 @@ class EngineSpec extends AnyFunSuite {
     assert(!sess.canRedo)
   }
 
+  private def rows(d: DataFrame): Seq[org.apache.spark.sql.Row] =
+    d.orderBy("user_id", "event_id").collect().toSeq
+
+  private def planNodes(d: DataFrame): Int =
+    d.queryExecution.optimizedPlan.collect { case n => n }.size
+
+  private def sessionDf: DataFrame = seriesDf((0 until 40).map(i => math.sin(i * 0.3)): _*)
+
+  test("session edits are materialized and equal the unmaterialized fold") {
+    val base = sessionDf
+    val sess = new Session(s, EngineState(base))
+    val afterDelete = SeriesOps.deleteCollapse(base, s, 5.5, 9.5)
+    val afterBad = SeriesOps.markBad(afterDelete, s, 12.0, 15.0)
+    val expected = SeriesOps.deleteCollapse(afterBad, s, 20.5, 24.5)
+
+    sess.deleteSegment(5.5, 9.5)
+    assert(rows(sess.state.df) == rows(afterDelete))
+    sess.markBad(12.0, 15.0)
+    assert(rows(sess.state.df) == rows(afterBad))
+    sess.annotate(Annotation(1.0, 2.0, "note"))
+    assert(sess.undo() && sess.state.annotations.isEmpty)
+    assert(sess.redo() && sess.state.annotations.map(_.label) == Vector("note"))
+    sess.deleteSegment(20.5, 24.5)
+    assert(rows(sess.state.df) == rows(expected))
+    // every data-changing state is cut from its lineage: one RDD leaf
+    assert(planNodes(sess.state.df) == 1)
+    assert(sess.undo() && rows(sess.state.df) == rows(afterBad))
+  }
+
+  test("session render plans do not grow with edit depth") {
+    val sess = new Session(s, EngineState(sessionDf))
+    val render = (d: DataFrame) => d.filter(col("tn").between(2.0, 8.0)).select("tn", "value")
+    val sizes = (1 to 8).map { i =>
+      if (i % 2 == 1) sess.deleteSegment(30.5 - i, 31.5 - i) else sess.markBad(i, i + 0.5)
+      val r = render(sess.state.df)
+      r.collect()
+      planNodes(r)
+    }
+    assert(sizes.forall(_ <= sizes.head), s"plan nodes per depth: $sizes")
+    // the same edits folded lazily grow by several nodes per edit
+    val folded = (1 to 8).foldLeft(sessionDf) { (d, i) =>
+      if (i % 2 == 1) SeriesOps.deleteCollapse(d, s, 30.5 - i, 31.5 - i)
+      else SeriesOps.markBad(d, s, i, i + 0.5)
+    }
+    assert(planNodes(render(folded)) > sizes.last)
+  }
+
+  test("a new mutation releases dropped states except frames still shared by annotate") {
+    val sc = spark.sparkContext
+    def rddId(d: DataFrame): Int =
+      org.apache.spark.sql.GraftExpressionBridge.checkpointedRddId(d).get
+    val sess = new Session(s, EngineState(sessionDf))
+    sess.deleteSegment(5.5, 9.5)
+    val shared = sess.state.df
+    val sharedRows = rows(shared)
+    sess.annotate(Annotation(1.0, 2.0, "note")) // same frame as the undo entry
+    assert(sess.state.df eq shared)
+    assert(sess.undo())
+    sess.markBad(12.0, 15.0) // drops the annotate state, whose frame is shared
+    assert(sc.getPersistentRDDs.contains(rddId(shared)))
+    val marked = sess.state.df
+    rows(marked)
+    assert(sess.undo())
+    assert(rows(sess.state.df) == sharedRows)
+    sess.deleteSegment(20.5, 24.5) // drops the mark_bad state
+    assert(!sc.getPersistentRDDs.contains(rddId(marked)))
+    assert(sc.getPersistentRDDs.contains(rddId(shared)))
+    assert(sess.undo() && rows(sess.state.df) == sharedRows)
+  }
+
   test("annotationAt tie-break: non-episode track, then shortest") {
     val sess = new Session(s, EngineState(seriesDf(1)))
     sess.annotate(Annotation(0, 10, "long", track = "notes"))
@@ -356,6 +426,50 @@ class EngineSpec extends AnyFunSuite {
     val auto = FilterEngine.apply(spark, d, s, Seq("value"), FilterSpec.ResampleAuto)
     val explicit = FilterEngine.apply(spark, d, s, Seq("value"), FilterSpec.ResampleTo(0.1))
     assert(auto.orderBy("tn").collect().toSeq == explicit.orderBy("tn").collect().toSeq)
+  }
+
+  private def channelsDf: DataFrame =
+    (for (u <- 1L to 2L; i <- 0 until 30)
+      yield (u, i.toLong, i * 0.1 * u + (if (i % 7 == 3) 0.03 else 0.0),
+        math.sin(i * 0.4 * u), math.cos(i * 0.2) * 3 + u, if (i % 5 == 2) None else Some(i * 0.5)))
+      .toDF("user_id", "event_id", "tn", "a", "b", "c")
+
+  test("multi-channel savgol is one projection, equal to the per-channel fold") {
+    val d = channelsDf
+    def fold(chs: Seq[String]) =
+      chs.foldLeft(d)((acc, ch) => SeriesOps.savgolInterior(acc, s, ch, ch, 7, 2))
+    def windows(x: DataFrame) = x.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.size
+    val fused = FilterEngine.apply(spark, d, s, Seq("a", "b", "c"), FilterSpec.Savgol(7, 2))
+    assert(fused.columns.toSeq == d.columns.toSeq)
+    assert(windows(fused) == 2)
+    assert(fused.exceptAll(fold(Seq("a", "b", "c"))).isEmpty)
+    assert(fold(Seq("a", "b", "c")).exceptAll(fused).isEmpty)
+    // a repeated channel is smoothed again, as the fold does
+    val dup = FilterEngine.apply(spark, d, s, Seq("a", "b", "a"), FilterSpec.Savgol(7, 2))
+    assert(rows(dup) == rows(fold(Seq("a", "b", "a"))))
+    assert(rows(dup) != rows(fused))
+  }
+
+  test("multi-channel resample shares one grid and equals each channel alone") {
+    val d = channelsDf
+    val grid = Seq("user_id", "tn")
+    val both = FilterEngine.apply(spark, d, s, Seq("a", "c"), FilterSpec.ResampleTo(0.25))
+    assert(both.columns.toSeq == Seq("user_id", "tn", "a", "c"))
+    val alone = Seq("a", "c")
+      .map(ch => FilterEngine.apply(spark, d, s, Seq(ch), FilterSpec.ResampleTo(0.25)))
+      .reduceLeft(_.join(_, grid))
+    def sorted(x: DataFrame) = x.orderBy(grid.map(col): _*).collect().toSeq
+    assert(sorted(both) == sorted(alone) && sorted(both).nonEmpty)
+    val auto = FilterEngine.apply(spark, d.filter(col("user_id") === 1L), s, Seq("a", "b"),
+      FilterSpec.ResampleAuto)
+    assert(auto.columns.toSeq == Seq("user_id", "tn", "a", "b"))
+    // a scoped resample is a named error, not an unresolved column
+    val e = intercept[IllegalArgumentException] {
+      FilterEngine.apply(spark, d, s, Seq("a"), FilterSpec.ResampleTo(0.25), Some((0.5, 1.5)))
+    }
+    assert(e.getMessage.contains("selection"))
   }
 
   test("reference-shaped recipe wire format parses and replays") {

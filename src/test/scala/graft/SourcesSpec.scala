@@ -25,6 +25,8 @@ class SourcesSpec extends AnyFunSuite {
         |0.3,2.5,a
         |""".stripMargin)
     val df = TrialReader.loadCsv(spark, p)
+    assert(df.schema.map(f => f.name -> f.dataType.typeName) ==
+      Seq("normalized_time" -> "double", "ch" -> "double", "label" -> "string"))
     assert(df.count() == 4)
     assert(df.filter(df("ch").isNull).count() == 2)
     assert(df.filter(df("label").isNull).count() == 1)
@@ -60,6 +62,8 @@ class SourcesSpec extends AnyFunSuite {
     assert(TrialReader.inferSampleRate(df, "normalized_time") == 120.0)
     assert(TrialReader.inferSampleRate(
       Seq.empty[Double].toDF("normalized_time"), "normalized_time") == 120.0)
+    assert(TrialReader.inferSampleRate(
+      Seq(0.5).toDF("normalized_time"), "normalized_time") == 120.0)
   }
 
   test("multi-trial batch infers a rate PER trial, not one global median") {
