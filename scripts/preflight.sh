@@ -4,8 +4,9 @@
 # Usage: scripts/preflight.sh [q_names]
 #   q_names  optional comma-separated query list (e.g. "q237,q238") to
 #            smoke through graft.Verify + scripts/check.py at sf0.001.
-#            Without it, only compilation (main + test) and the
-#            benchmark's statistics tests are checked.
+#            Without it, only compilation (main + test), the
+#            benchmark's statistics tests and the codegen cache spec
+#            are checked.
 #
 # Exit code 0 = safe to commit/pause; anything else = fix first.
 set -euo pipefail
@@ -21,6 +22,14 @@ echo "== preflight: benchmark statistics tests =="
 python3 -m unittest discover graftbench > /tmp/preflight_bench_stats.log 2>&1 || {
   tail -30 /tmp/preflight_bench_stats.log
   echo "PREFLIGHT FAIL: graftbench unittest"; exit 1
+}
+
+# a fresh forked test JVM, so the codegen cache is sized by the shared
+# engine config (Graft.EngineConf), not by an earlier suite's session
+echo "== preflight: codegen cache spec =="
+sbt -batch "testOnly graft.CodegenCacheSpec" > /tmp/preflight_codegen.log 2>&1 || {
+  tail -30 /tmp/preflight_codegen.log
+  echo "PREFLIGHT FAIL: CodegenCacheSpec"; exit 1
 }
 
 if [[ $# -ge 1 && -n "${1:-}" ]]; then

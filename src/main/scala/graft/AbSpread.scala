@@ -17,12 +17,7 @@ object AbSpread {
     val prop = if (args.length > 3) args(3) else "graft.spread"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", Bench.derivePartitions(sfDir, cpus))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      .config(Bench.sessionConf(sfDir, cpus) + ("spark.sql.adaptive.enabled" -> "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

@@ -1,4 +1,5 @@
 package graft
+import graft.api.Graft
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: runs every declared query on
@@ -40,33 +41,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Scale-ADAPTIVE reduce parallelism (guide §2.2: size partitions
-      // by bytes, not a constant): partitions = ceil(inputBytes /
-      // target) clamped to [1, 4*cpus]. The old constant (= cpus) was
-      // tuned for neither scale: at sf0.1 (18 MB input) every exchange
-      // fans 32 ~KB-sized tasks per stage and scheduling dominates
-      // (the r9 driver's own 8-cpu sweep beat its 32-cpu sweep 175 s
-      // vs 266 s on identical code); at 100 TB it would undersize
-      // partitions 6 orders of magnitude. Deploys retune via
-      // SPARK_GRAFT_PART_MB (target partition size, default 128 MB —
-      // guide §2.2's 100 MB-1 GB band) or pin SPARK_GRAFT_SHUFFLE.
-      .config("spark.sql.shuffle.partitions", Bench.derivePartitions(sfDir, cpus))
-      // AQE stays off HERE only: at bench scale every stage is
-      // milliseconds and adaptive stage boundaries add ~15% (measured
-      // 64.6 s -> 74.0 s at sf0.1; the iterative q70 doubles). The
-      // deploy-facing session (api.Graft.sparkSession) enables AQE —
-      // at 100 TB runtime re-planning (skew-join splitting, partition
-      // coalescing) is the correct posture. SPARK_GRAFT_AQE=true
-      // re-measures that trade locally (r9 re-check — the off-default
-      // measurement predates the many-tiny-stage Lloyd/recall queries).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().config(sessionConf(sfDir, cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Per-query attribution (see BenchDiag scaladoc): splits wall time
     // into task-run/CPU/GC/spill vs outside-task time so a sweep
@@ -275,4 +250,29 @@ object Bench {
     println(line)
     spark.stop()
   }
+
+  def sessionConf(sfDir: String, cpus: String): Map[String, String] =
+    Graft.EngineConf ++ Map(
+      "spark.master" -> s"local[$cpus]",
+      // Scale-ADAPTIVE reduce parallelism (guide §2.2: size partitions
+      // by bytes, not a constant): partitions = ceil(inputBytes /
+      // target) clamped to [1, 4*cpus]. The old constant (= cpus) was
+      // tuned for neither scale: at sf0.1 (18 MB input) every exchange
+      // fans 32 ~KB-sized tasks per stage and scheduling dominates
+      // (the r9 driver's own 8-cpu sweep beat its 32-cpu sweep 175 s
+      // vs 266 s on identical code); at 100 TB it would undersize
+      // partitions 6 orders of magnitude. Deploys retune via
+      // SPARK_GRAFT_PART_MB (target partition size, default 128 MB —
+      // guide §2.2's 100 MB-1 GB band) or pin SPARK_GRAFT_SHUFFLE.
+      "spark.sql.shuffle.partitions" -> derivePartitions(sfDir, cpus),
+      // AQE stays off HERE only: at bench scale every stage is
+      // milliseconds and adaptive stage boundaries add ~15% (measured
+      // 64.6 s -> 74.0 s at sf0.1; the iterative q70 doubles). The
+      // deploy-facing session (api.Graft.sparkSession) enables AQE —
+      // at 100 TB runtime re-planning (skew-join splitting, partition
+      // coalescing) is the correct posture. SPARK_GRAFT_AQE=true
+      // re-measures that trade locally (r9 re-check — the off-default
+      // measurement predates the many-tiny-stage Lloyd/recall queries).
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "false"),
+      "spark.ui.enabled" -> "false")
 }

@@ -2,7 +2,9 @@ package graft
 
 import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.LongAdder
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import scala.jdk.CollectionConverters._
 
 /** Per-query bench diagnostics. Round 5's driver sweep recorded a
@@ -21,7 +23,12 @@ import scala.jdk.CollectionConverters._
   *    pressure from sweep aging (the 8g-vs-24g effect in build.sbt);
   *  - `spillMemB`/`spillDiskB` nonzero                     -> genuine
   *    operator memory pressure (WindowExec/sort buffers) — impossible
-  *    at sf0.1's 99-rows-per-user windows, so nonzero means a plan bug.
+  *    at sf0.1's 99-rows-per-user windows, so nonzero means a plan bug;
+  *  - `codegenCompiles`/`codegenCompileMs` nonzero on a repeated query
+  *    -> generated classes were recompiled, not reused from Spark's
+  *    codegen cache (evicted, or new literals inlined into the code).
+  *    Read from Spark's JVM-wide codegen counters, so they cover the
+  *    driver and, in local mode, the tasks too.
   */
 final class TaskMetricsListener extends SparkListener {
   private val runMs = new LongAdder
@@ -45,14 +52,17 @@ final class TaskMetricsListener extends SparkListener {
 
   def snapshot: TaskSnapshot =
     TaskSnapshot(runMs.sum, cpuNs.sum / 1000000L, gcMs.sum,
-      memSpill.sum, diskSpill.sum, tasks.sum)
+      memSpill.sum, diskSpill.sum, tasks.sum,
+      BenchDiag.codegenCompiles, BenchDiag.codegenCompileMs)
 }
 
 final case class TaskSnapshot(runMs: Long, cpuMs: Long, gcMs: Long,
-    memSpillB: Long, diskSpillB: Long, tasks: Long) {
+    memSpillB: Long, diskSpillB: Long, tasks: Long,
+    codegenCompiles: Long, codegenCompileMs: Long) {
   def -(o: TaskSnapshot): TaskSnapshot =
     TaskSnapshot(runMs - o.runMs, cpuMs - o.cpuMs, gcMs - o.gcMs,
-      memSpillB - o.memSpillB, diskSpillB - o.diskSpillB, tasks - o.tasks)
+      memSpillB - o.memSpillB, diskSpillB - o.diskSpillB, tasks - o.tasks,
+      codegenCompiles - o.codegenCompiles, codegenCompileMs - o.codegenCompileMs)
 }
 
 object BenchDiag {
@@ -74,6 +84,16 @@ object BenchDiag {
   def heapUsedMb: Long =
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
 
+  def metaspaceMb: Long =
+    ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed >> 20).sum
+
+  /** Generated classes compiled in this JVM so far (cache misses of
+    * Spark's codegen cache), and the time spent compiling them, ms.
+    */
+  def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  def codegenCompileMs: Long = CodeGenerator.compileTime / 1000000L
+
   /** One repeat's attribution record. */
   final case class Rec(wallMs: Long, ts: TaskSnapshot, drvGcMs: Long,
       procCpuMs: Long)
@@ -81,5 +101,6 @@ object BenchDiag {
   def recJson(r: Rec): String =
     s"""{"wallMs":${r.wallMs},"taskRunMs":${r.ts.runMs},"taskCpuMs":${r.ts.cpuMs},""" +
       s""""taskGcMs":${r.ts.gcMs},"spillMemB":${r.ts.memSpillB},"spillDiskB":${r.ts.diskSpillB},""" +
-      s""""tasks":${r.ts.tasks},"drvGcMs":${r.drvGcMs},"procCpuMs":${r.procCpuMs}}"""
+      s""""tasks":${r.ts.tasks},"drvGcMs":${r.drvGcMs},"procCpuMs":${r.procCpuMs},""" +
+      s""""codegenCompiles":${r.ts.codegenCompiles},"codegenCompileMs":${r.ts.codegenCompileMs}}"""
 }

@@ -1,4 +1,5 @@
 package graft
+import graft.api.Graft
 import org.apache.spark.sql.SparkSession
 
 /** Plan inspection: `runMain graft.Explain <queryName> [sfDir]`
@@ -7,16 +8,19 @@ import org.apache.spark.sql.SparkSession
   * work depends on.
   */
 object Explain {
+  /** Session config of the plan-inspection tools (Explain, ExplainAll,
+    * PlanAudit): the engine map at a fixed small local parallelism.
+    */
+  val sessionConf: Map[String, String] = Graft.EngineConf ++ Map(
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.ui.enabled" -> "false")
+
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val mode = if (args.length > 2) args(2) else "formatted"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().config(sessionConf).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (mode == "opt") println(df.queryExecution.optimizedPlan.treeString)

@@ -13,12 +13,7 @@ object ExplainAll {
     val Array(outDir, suffix, list) = args.take(3)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
     val pats = list.split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().config(Explain.sessionConf).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     for (q <- SparkEntry.allQueries if pats.exists(p =>

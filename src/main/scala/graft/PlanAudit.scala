@@ -12,12 +12,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().config(Explain.sessionConf).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.allQueries.sortBy(_.name).foreach { q =>
       try {

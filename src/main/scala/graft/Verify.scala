@@ -1,21 +1,22 @@
 package graft
+import graft.api.Graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  def sessionConf(sfDir: String, cpus: String): Map[String, String] =
+    Graft.EngineConf ++ Map(
+      "spark.master" -> s"local[$cpus]",
+      // same scale-adaptive parallelism as the bench (Bench scaladoc):
+      // partition count follows input bytes, not the core constant
+      "spark.sql.shuffle.partitions" -> Bench.derivePartitions(sfDir, cpus),
+      "spark.ui.enabled" -> "false")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same scale-adaptive parallelism as the bench (Bench scaladoc):
-      // partition count follows input bytes, not the core constant
-      .config("spark.sql.shuffle.partitions", Bench.derivePartitions(sfDir, cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().config(sessionConf(sfDir, cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Local iteration aid (driver sets no env): SPARK_GRAFT_ONLY=q128,q129
@@ -55,6 +56,8 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(o => keep(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] codegen: ${BenchDiag.codegenCompiles} classes compiled in " +
+      s"${BenchDiag.codegenCompileMs} ms; metaspace ${BenchDiag.metaspaceMb} MB")
     spark.stop()
   }
 }

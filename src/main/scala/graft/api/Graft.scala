@@ -40,23 +40,44 @@ object Graft {
       series: Series, sampleRate: Double,
       sampleRates: Option[DataFrame] = None)
 
-  /** Session defaults tuned for the engine: AQE on (skew-join +
-    * coalescing) — shuffle partitions come from the deploy (set
-    * explicitly in local mode). `nanosAsLong` is pinned at BUILD time
-    * (one of `events.parquet`'s physical encodings is
-    * TIMESTAMP(NANOS), which Spark 4 otherwise rejects); it is a
-    * session-wide read setting, so it belongs here, not inside a
-    * table accessor ([[graft.sources.Tables.events]] asserts it).
+  /** Entries of Spark's JVM-wide generated-code cache (default 100).
+    * The engine's working set is larger: one pass of ten registry
+    * queries generates about 200 distinct whole-stage classes, one
+    * trial session about 110. At 100, LRU eviction drops every class
+    * before its next use and each repeated pass recompiles all of them
+    * (on the driver and again inside tasks); at 1000 a repeated
+    * ten-query pass compiles none, at unchanged metaspace and heap.
     */
+  val CodegenCacheEntries = 1000
+
+  /** Settings every session builder in the project applies:
+    *  - UTC session zone, for every wall-time conversion;
+    *  - `nanosAsLong`, pinned at BUILD time (one of `events.parquet`'s
+    *    physical encodings is TIMESTAMP(NANOS), which Spark 4 otherwise
+    *    rejects); it is a session-wide read setting, so it belongs
+    *    here, not inside a table accessor
+    *    ([[graft.sources.Tables.events]] asserts it);
+    *  - the codegen cache bound: the cache is sized by the first
+    *    session that generates code in a JVM, so every builder carries it.
+    */
+  val EngineConf: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
+
+  /** Deploy session config: [[EngineConf]] plus AQE on (skew-join +
+    * coalescing); shuffle partitions come from the deploy (set
+    * explicitly in local mode).
+    */
+  def sessionConf(master: String = "local[*]", shufflePartitions: Int = 32): Map[String, String] =
+    EngineConf ++ Map(
+      "spark.master" -> master,
+      "spark.app.name" -> "graft",
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.adaptive.enabled" -> "true")
+
   def sparkSession(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
-    SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    SparkSession.builder().config(sessionConf(master, shufflePartitions)).getOrCreate()
 
   /** Load + classify one trial CSV (S1-S4). `trialCol` is None for
     * the reference's one-trial-per-file model; batch pipelines load

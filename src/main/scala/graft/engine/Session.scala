@@ -47,6 +47,11 @@ final case class EngineState(
   * undo stack no longer share (by reference, via `annotate`); a released
   * frame must not be read again. Checkpointed rows live only in executor
   * block managers and do not survive executor loss.
+  *
+  * Replays (undo/redo, recipe replay, re-rendering the same window)
+  * reuse compiled classes from Spark's codegen cache, sized in
+  * [[graft.api.Graft.EngineConf]]. An edit with new bounds compiles
+  * its own classes: Spark inlines literals into generated code.
   */
 final class Session(s: Series, initial: EngineState) {
   private var current: EngineState = initial

@@ -43,6 +43,15 @@ object SeriesOps {
       ordered.rowsBetween(-h, h)
     }
     def running: WindowSpec = ordered.rowsBetween(Window.unboundedPreceding, 0)
+
+    /** A key-less series (one trial) is a single partition for every
+      * window over it. `coalesce(1)` gets there with a narrow
+      * dependency, where the planner would add an `Exchange
+      * SinglePartition` shuffle; the upstream work then runs in one
+      * task, which the window already forced. Keyed input is returned
+      * unchanged: its windows need the hash exchange by key.
+      */
+    def colocate(df: DataFrame): DataFrame = if (keyCols.isEmpty) df.coalesce(1) else df
   }
 
   // ---------------------------------------------------------------
@@ -315,7 +324,7 @@ object SeriesOps {
       }.reduceLeft(_ + _)
       when(rn > h && rn <= n - h, fir).otherwise(col(value))
     }
-    df.withColumns(scala.collection.immutable.ListMap(
+    s.colocate(df).withColumns(scala.collection.immutable.ListMap(
       pairs.map { case (value, out) => out -> smoothed(value) }: _*))
   }
 
@@ -382,7 +391,7 @@ object SeriesOps {
     */
   def deleteCollapse(df: DataFrame, s: Series, start: Double, end: Double): DataFrame = {
     val t = col(s.timeCol)
-    val surv = df.filter(t < start || t > end)
+    val surv = s.colocate(df).filter(t < start || t > end)
     // per-series median as a whole-partition window aggregate: rides
     // the SAME hash partitioning as the lag/rank windows (one shuffle
     // total), where a groupBy + join-back needs a second aggregation

@@ -91,7 +91,8 @@ object TrialReader {
     */
   def inferSampleRate(df: DataFrame, timeCol: String): Double = {
     val w = Window.partitionBy().orderBy(col(timeCol))
-    val dts = df
+    // one trial: colocated without a shuffle (Series.colocate)
+    val dts = df.coalesce(1)
       .withColumn("__dt", col(timeCol) - lag(col(timeCol), 1).over(w))
       .filter(col("__dt") > 0)
     // one job: the median of no deltas is null, which falls back too

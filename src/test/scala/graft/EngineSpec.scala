@@ -452,6 +452,35 @@ class EngineSpec extends AnyFunSuite {
     assert(rows(dup) != rows(fused))
   }
 
+  /** Shuffle exchanges of the executed plan, inside AQE stages too. */
+  private def shuffles(d: DataFrame): Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case e: ShuffleExchangeExec => Seq(e)
+    }.flatten
+    d.collect()
+    walk(d.queryExecution.executedPlan)
+  }
+
+  test("key-less series windows run without a shuffle; keyed ones keep the hash exchange") {
+    val keyed = channelsDf.filter(col("user_id") === 1L)
+    val one = keyed.drop("user_id")
+    val keyless = Series(Nil, "tn", Seq("event_id"))
+    val del = SeriesOps.deleteCollapse(one, keyless, 0.85, 1.45)
+    assert(shuffles(del).isEmpty)
+    val viaKey = SeriesOps.deleteCollapse(keyed, s, 0.85, 1.45)
+    val viaKeyRows = viaKey.drop("user_id")
+    assert(del.exceptAll(viaKeyRows).isEmpty && viaKeyRows.exceptAll(del).isEmpty)
+    assert(shuffles(viaKey).exists(
+      _.outputPartitioning.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]))
+    assert(shuffles(SeriesOps.savgolChannels(one, keyless, Seq("a" -> "a", "b" -> "b"), 7, 2)).isEmpty)
+    assert(graft.sources.TrialReader.inferSampleRate(one, "tn") == 10.0)
+  }
+
   test("multi-channel resample shares one grid and equals each channel alone") {
     val d = channelsDf
     val grid = Seq("user_id", "tn")

@@ -1,17 +1,17 @@
 package graft
 
+import graft.api.Graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all specs (JVM forked by sbt). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
+  val conf: Map[String, String] = Graft.EngineConf ++ Map(
+    "spark.master" -> "local[2]",
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.shuffle.partitions" -> "2",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+
+  lazy val spark: SparkSession = SparkSession.builder().config(conf).getOrCreate()
 }
