@@ -133,7 +133,7 @@ object Graft {
         // full outer keeps every original knot for the interpolation,
         // then only the grid rows (filtered non-null) survive
         val both = filtered.join(orig, keys, "full_outer")
-        SeriesOps.interpolateLinear(both, s, "original", "original")
+        SeriesOps.interpolate(both, s, "linear", Seq("original" -> "original"))
           .filter(col("filtered").isNotNull)
       case _ => filtered.join(orig, keys)
     }

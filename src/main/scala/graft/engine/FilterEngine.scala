@@ -244,14 +244,13 @@ object FilterEngine {
       // on the axis, so it shares the linear path by identity, not by
       // fallback. Unknown methods THROW — silently interpolating with
       // a different method than the recipe asked for is a wrong answer.
-      case Interpolate("nearest") => SeriesOps.interpolateNearest(df, s, src, out)
-      case Interpolate("zero") => SeriesOps.interpolateZero(df, s, src, out)
+      case Interpolate(m @ ("nearest" | "zero" | "linear")) =>
+        SeriesOps.interpolate(df, s, m, Seq(src -> out))
+      case Interpolate("slinear") => SeriesOps.interpolate(df, s, "linear", Seq(src -> out))
       case Interpolate("cubic") =>
         withSrc(df, s, src, out)(SignalKernels.interpolateCubic(spark, _, s, _, _))
       case Interpolate("quadratic") =>
         withSrc(df, s, src, out)(SignalKernels.interpolateQuadratic(spark, _, s, _, _))
-      case Interpolate("linear") | Interpolate("slinear") =>
-        SeriesOps.interpolateLinear(df, s, src, out)
       case Interpolate(other) =>
         throw new IllegalArgumentException(
           s"unknown interpolate method '$other' (supported: linear, nearest, zero, slinear, quadratic, cubic)")

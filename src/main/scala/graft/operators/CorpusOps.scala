@@ -543,7 +543,8 @@ object CorpusOps {
        |WHERE c.neg_id <> c.doc_id
        |ORDER BY c.doc_id, c.k""".stripMargin) { (spark, dir) =>
     val ids = docs(spark, dir).select("doc_id")
-    val n = lit(ids.agg(max("doc_id")).head().getLong(0) + 1)
+    // an empty table has no max; any n works, there are no anchors
+    val n = lit(ids.agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) + 1)
     val cand = ids
       .select(col("doc_id"), explode(array(lit(0L), lit(1L))).as("k"))
       .withColumn("neg_id", graft.functions.TextHash.base32Builtin(

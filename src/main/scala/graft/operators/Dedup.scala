@@ -507,9 +507,11 @@ object Dedup {
       .distinct()
       .withColumn("lab", col("d"))
       .scopedPersist()
-    var converged = false
+    // an empty pair set has no labels: it converges at round 0
+    val init = labels.agg(count(lit(1)), coalesce(sum("lab"), lit(0L))).head()
+    var converged = init.getLong(0) == 0
     var rounds = 0
-    var labSum = labels.agg(sum("lab")).head().getLong(0)
+    var labSum = init.getLong(1)
     while (!converged && rounds < 20) {
       val step = labels
         .unionAll(edges.join(labels, edges("a") === labels("d"))

@@ -44,7 +44,7 @@ object EventSeriesJoins {
        |FROM b ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
     val df = Tables.seriesNorm(spark, dir)
       .withColumn("v", when(col("event_type") =!= "error", col("value")))
-    SeriesOps.interpolateLinear(df, s, "v", "vi")
+    SeriesOps.interpolate(df, s, "linear", Seq("v" -> "vi"))
       .select("user_id", "event_id", "tn", "vi")
       .orderBy("user_id", "event_id")
   }
@@ -110,7 +110,7 @@ object EventSeriesJoins {
        |FROM b ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
     val df = Tables.seriesNorm(spark, dir)
       .withColumn("v", when(col("event_type") =!= "error", col("value")))
-    SeriesOps.interpolateNearest(df, s, "v", "vn")
+    SeriesOps.interpolate(df, s, "nearest", Seq("v" -> "vn"))
       .select("user_id", "event_id", "tn", "vn")
       .orderBy("user_id", "event_id")
   }
@@ -167,7 +167,7 @@ object EventSeriesJoins {
        |FROM b ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
     val df = Tables.seriesNorm(spark, dir)
       .withColumn("v", when(col("event_type") =!= "error", col("value")))
-    SeriesOps.interpolateZero(df, s, "v", "vz")
+    SeriesOps.interpolate(df, s, "zero", Seq("v" -> "vz"))
       .select("user_id", "event_id", "tn", "vz")
       .orderBy("user_id", "event_id")
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,39 +8,22 @@ import org.apache.spark.sql.functions._
   * filter_engine.py:80-84, 148-170) and the general as-of pattern it
   * is built from.
   *
-  * Strategy ("union trick"): instead of a range join (which Catalyst
-  * would plan as a broadcast nested-loop join), grid points and
-  * samples are unioned into ONE ordered stream per series; the
-  * bracketing sample before/after each grid point then falls out of
-  * two RUNNING `last ignoreNulls` windows — the "after" one over the
-  * reversed sort, so both frames evaluate incrementally (a literal
-  * [current, unboundedFollowing] frame re-aggregates the tail for
-  * every row: O(n²) per series). That is a single shuffle by series
-  * key + two in-partition sorts — O(n log n) per series, no
-  * quadratic join or frame, and it reuses the same partitioning
-  * every other series op uses. This is the 100 TB-safe shape for as-of joins with
-  * high-cardinality keys; DuckDB's native ASOF JOIN is the same idea.
+  * Strategy ("union, then interpolate"): instead of a range join
+  * (which Catalyst would plan as a broadcast nested-loop join), probe
+  * points and samples are unioned into ONE ordered stream per series
+  * in which every probe value is null, and the probes are then filled
+  * by [[SeriesOps.interpolate]] like any other gap. Its bracket kernel
+  * is two running windows, the second over the reversed sort: one
+  * shuffle by series key and two in-partition sorts per pass,
+  * O(n log n) per series, whatever the channel count. The union
+  * reuses the partitioning every other series op uses, so this is the
+  * scale-safe shape for as-of joins with high-cardinality keys;
+  * DuckDB's native ASOF JOIN is the same idea.
   */
 object Resample {
 
   import SeriesOps.Series
 
-  /** Null-safe tie-break columns, materialized so every window spec
-    * in a pass sorts on identical attributes (one sort per pass).
-    */
-  private def withOrdCols(df: DataFrame, s: Series): DataFrame =
-    s.tieCols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      d.withColumn(s"__ord_$i", coalesce(col(c), lit(-1L)))
-    }
-
-  private def ordCols(s: Series): Seq[org.apache.spark.sql.Column] =
-    col(s.timeCol) +: col("__g") +: s.tieCols.indices.map(i => col(s"__ord_$i"))
-
-  /** `np.interp`-style linear resample of `value` onto the uniform
-    * per-series grid `{0, step, 2·step, … ≤ max(t)}`, ends clamped to
-    * the nearest sample (filter_engine.py:165). Returns one row per
-    * grid point: series keys + `timeCol` (grid time) + `out`.
-    */
   /** Per-series uniform probe grid `{0, step, …, ≤ max(t)}` — one
     * `sequence`+`explode` per series, built from a single agg pass.
     */
@@ -52,149 +35,92 @@ object Resample {
       .drop("__i")
   }
 
+  /** Samples (`__g` = 0) and probes (`__g` = 1) as one stream per
+    * series: keys, time, `__g`, the named sample `cols` (null on probe
+    * rows), then null-safe tie-break columns `__ord_i` (probes: -1).
+    * Returns the union and the series that orders it by
+    * `(time, __g, __ord_i…)`: at equal times samples sort before
+    * probes, so a probe exactly on a sample brackets that sample
+    * (np.interp semantics).
+    */
+  private def withProbes(samples: DataFrame, probes: DataFrame, s: Series,
+      cols: Seq[Column]): (DataFrame, Series) = {
+    val head = s.keyCols.map(col) :+ col(s.timeCol)
+    val ords = s.tieCols.indices.map(i => s"__ord_$i")
+    val sPart = samples.select((head :+ lit(0).as("__g")) ++ cols ++
+      s.tieCols.zip(ords).map { case (c, o) => col(c).as(o) }: _*)
+    val pPart = probes.select((head :+ lit(1).as("__g")) ++
+      sPart.schema.fields.drop(head.size + 1).map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+    val union = sPart.unionAll(pPart)
+      .withColumns(ords.map(o => o -> coalesce(col(o), lit(-1L))).toMap)
+    (union, Series(s.keyCols, s.timeCol, "__g" +: ords))
+  }
+
+  /** Linear interpolation of each `values` column (cast to double) at
+    * the probe times, and each `labelCols` column's first non-null value
+    * in time order; one row per probe: keys, time, then one column per
+    * `values ++ labelCols`, in that order. Probe values are null, so
+    * [[SeriesOps.interpolate]] yields `np.interp`: the lerp between the
+    * bracketing samples, ends clamped (filter_engine.py:165).
+    */
+  private def lerpOnto(samples: DataFrame, probes: DataFrame, s: Series,
+      values: Seq[String], labelCols: Seq[String]): DataFrame = {
+    val (union, us) = withProbes(samples, probes, s,
+      values.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__v_$i") } ++
+        labelCols.map(col))
+    // labels first: this window sorts like the kernel's ascending one,
+    // so the pass keeps two sorts
+    val whole = us.ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val labeled = union.select(col("*") +: labelCols.zipWithIndex.map { case (c, j) =>
+      first(col(c), ignoreNulls = true).over(whole).as(s"__o_${values.size + j}")
+    }: _*)
+    SeriesOps.interpolate(labeled, us, "linear", values.indices.map(i => s"__v_$i" -> s"__o_$i"))
+      .filter(col("__g") === 1)
+      .select((s.keyCols :+ s.timeCol).map(col) ++
+        (values ++ labelCols).indices.map(i => col(s"__o_$i")): _*)
+  }
+
+  /** `np.interp`-style linear resample of `value` onto the uniform
+    * per-series grid `{0, step, 2·step, … ≤ max(t)}`, ends clamped to
+    * the nearest sample (filter_engine.py:165). Returns one row per
+    * grid point: series keys + `timeCol` (grid time) + `out`.
+    */
   def toUniformGrid(samples: DataFrame, s: Series, value: String, out: String,
       step: Double): DataFrame =
     interpolateAt(samples, uniformGrid(samples, s, step), s, value, out)
 
   /** Linear interpolation of `value` at each probe row's time. The
-    * probe side must have the series keys + time column; sample-side
-    * ties sort before probes at equal times so a probe exactly on a
-    * sample returns that sample's value (np.interp semantics).
+    * probe side must have the series keys + time column; a probe
+    * exactly on a sample returns that sample's value (np.interp
+    * semantics).
     */
   def interpolateAt(samples: DataFrame, probes: DataFrame, s: Series, value: String,
-      out: String): DataFrame = {
-    val keyNames = s.keyCols
-
-    val sPart = samples
-      .select((keyNames.map(col) :+ col(s.timeCol) :+ col(value).as("__v") :+
-        lit(0).as("__g")) ++ s.tieCols.map(col): _*)
-    val pPart = probes
-      .select((keyNames.map(col) :+ col(s.timeCol) :+ lit(null).cast("double").as("__v") :+
-        lit(1).as("__g")) ++ s.tieCols.map(_ => lit(null).cast("long")): _*)
-      .toDF(sPart.columns.toIndexedSeq: _*)
-
-    // Bracket windows, fused and linear: each direction carries ONE
-    // (value, time) struct in a RUNNING `last ignoreNulls` frame. The
-    // "next sample" direction runs over the REVERSED ordering — a
-    // running frame on the descending sort is exactly `first
-    // ignoreNulls` over [current, end] ascending, but Spark evaluates
-    // a running frame incrementally (O(n) per series) where an
-    // explicit [0, unboundedFollowing] frame re-aggregates the
-    // remaining rows for every row (O(n²) per series — a scale
-    // hazard for long series). One shuffle, two in-partition sorts.
-    val union = withOrdCols(sPart.unionAll(pPart), s)
-    val ord = ordCols(s)
-    val before = Window.partitionBy(keyNames.map(col): _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val revBefore = Window.partitionBy(keyNames.map(col): _*)
-      .orderBy(ord.map(_.desc): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-
-    val v = col("__v"); val tt = col(s.timeCol)
-    val sample = when(v.isNotNull, struct(v.as("v"), tt.as("t")))
-
-    union
-      .withColumn("__prev", last(sample, ignoreNulls = true).over(before))
-      .withColumn("__next", last(sample, ignoreNulls = true).over(revBefore))
-      .withColumn("__pv", col("__prev.v")).withColumn("__pt", col("__prev.t"))
-      .withColumn("__nv", col("__next.v")).withColumn("__nt", col("__next.t"))
-      .filter(col("__g") === 1)
-      .withColumn(out,
-        when(col("__pv").isNull, col("__nv"))
-          .when(col("__nv").isNull, col("__pv"))
-          .when(col("__nt") === col("__pt"), col("__pv"))
-          .otherwise(col("__pv") +
-            (col("__nv") - col("__pv")) * (tt - col("__pt")) / (col("__nt") - col("__pt"))))
-      .select((keyNames.map(col) :+ tt.as(s.timeCol) :+ col(out)): _*)
-  }
+      out: String): DataFrame =
+    lerpOnto(samples, probes, s, Seq(value), Nil).toDF(s.keyCols :+ s.timeCol :+ out: _*)
 
   /** Full-frame resample (reference W11, filter_engine.py:148-170):
     * every numeric channel is linearly interpolated onto the uniform
     * grid, boolean flags are interpolated then re-binarized at > 0.5
     * (filter_engine.py:168-169), and label columns collapse to the
-    * series' first value (filter_engine.py:166-167) — ALL in one
-    * union-and-window pass (one shuffle total, not one per column).
+    * series' first value in time order (filter_engine.py:166-167) —
+    * ALL in one union-and-window pass (one shuffle total, not one per
+    * column).
     */
   def resampleFrame(samples: DataFrame, s: Series, numericCols: Seq[String],
-      flagCols: Seq[String], labelCols: Seq[String], step: Double): DataFrame = {
-    val keyNames = s.keyCols
-    val interp = numericCols ++ flagCols
-    val grid = uniformGrid(samples, s, step)
+      flagCols: Seq[String], labelCols: Seq[String], step: Double): DataFrame =
+    lerpOnto(samples, uniformGrid(samples, s, step), s, numericCols ++ flagCols, labelCols)
+      .toDF(s.keyCols ++ (s.timeCol +: numericCols) ++ flagCols ++ labelCols: _*)
+      .withColumns(flagCols.map(c => c -> (col(c) > 0.5)).toMap)
 
-    val sPart = samples.select(
-      (keyNames.map(col) :+ col(s.timeCol) :+ lit(0).as("__g")) ++
-        interp.map(c => col(c).cast("double").as(s"__v_$c")) ++
-        labelCols.map(col) ++ s.tieCols.map(col): _*)
-    val pPart = grid.select(
-      (keyNames.map(col) :+ col(s.timeCol) :+ lit(1).as("__g")) ++
-        interp.map(c => lit(null).cast("double").as(s"__v_$c")) ++
-        labelCols.map(c => lit(null).cast(samples.schema(c).dataType).as(c)) ++
-        s.tieCols.map(_ => lit(null).cast("long")): _*)
-      .toDF(sPart.columns.toIndexedSeq: _*)
-
-    val ord = ordCols(s)
-    // same fused/linear bracket shape as interpolateAt: per column ONE
-    // (value, time) struct per direction, the "next" direction as a
-    // running frame over the reversed sort (O(n) per series; an
-    // explicit unbounded-following frame would re-aggregate per row).
-    // All ascending-frame expressions are added in ONE select so they
-    // plan as a single Window node; likewise the descending ones.
-    val before = Window.partitionBy(keyNames.map(col): _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val revBefore = Window.partitionBy(keyNames.map(col): _*)
-      .orderBy(ord.map(_.desc): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // time-ordered full frame: "first label" is the first non-null in
-    // time order (grid rows carry nulls), not an arbitrary partition row
-    val wholeW = Window.partitionBy(keyNames.map(col): _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val tt = col(s.timeCol)
-
-    val union = withOrdCols(sPart.unionAll(pPart), s)
-    val brackets = union.select(
-      (union.columns.map(col).toSeq ++
-        interp.flatMap { c =>
-          val v = col(s"__v_$c")
-          val sm = when(v.isNotNull, struct(v.as("v"), tt.as("t")))
-          Seq(last(sm, ignoreNulls = true).over(before).as(s"__prev_$c"),
-            last(sm, ignoreNulls = true).over(revBefore).as(s"__next_$c"))
-        } ++
-        labelCols.map(c => first(col(c), ignoreNulls = true).over(wholeW).as(s"__o_$c"))): _*)
-    val withLabels = interp.foldLeft(brackets) { (d, c) =>
-      val pv = col(s"__prev_$c.v"); val pt = col(s"__prev_$c.t")
-      val nv = col(s"__next_$c.v"); val nt = col(s"__next_$c.t")
-      val li = when(pv.isNull, nv).when(nv.isNull, pv)
-        .when(nt === pt, pv)
-        .otherwise(pv + (nv - pv) * (tt - pt) / (nt - pt))
-      d.withColumn(s"__o_$c", li)
-    }
-    withLabels.filter(col("__g") === 1)
-      .select((keyNames.map(col) :+ tt.as(s.timeCol)) ++
-        numericCols.map(c => col(s"__o_$c").as(c)) ++
-        flagCols.map(c => (col(s"__o_$c") > 0.5).as(c)) ++
-        labelCols.map(c => col(s"__o_$c").as(c)): _*)
-  }
-
-  /** Backward as-of join: for each probe row, the latest sample value
-    * at-or-before its time (per series). Same union trick, prev-only.
+  /** Backward as-of join: for each probe row, the latest non-null
+    * sample value at-or-before its time (per series) — the union with
+    * the previous bracket only, i.e. a forward fill.
     */
   def asofBackward(samples: DataFrame, probes: DataFrame, s: Series, value: String,
       out: String): DataFrame = {
-    val keyNames = s.keyCols
-    val sPart = samples
-      .select((keyNames.map(col) :+ col(s.timeCol) :+ col(value).as("__v") :+
-        lit(0).as("__g")) ++ s.tieCols.map(col): _*)
-    val pPart = probes
-      .select((keyNames.map(col) :+ col(s.timeCol) :+ lit(null).cast("double").as("__v") :+
-        lit(1).as("__g")) ++ s.tieCols.map(_ => lit(null).cast("long")): _*)
-      .toDF(sPart.columns.toIndexedSeq: _*)
-
-    val w = Window.partitionBy(keyNames.map(col): _*).orderBy(ordCols(s): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-
-    withOrdCols(sPart.unionAll(pPart), s)
-      .withColumn(out, last(col("__v"), ignoreNulls = true).over(w))
+    val (union, us) = withProbes(samples, probes, s, Seq(col(value).as("__v")))
+    SeriesOps.ffill(union, us, "__v", out)
       .filter(col("__g") === 1)
-      .select((keyNames.map(col) :+ col(s.timeCol) :+ col(out)): _*)
+      .select((s.keyCols :+ s.timeCol :+ out).map(col): _*)
   }
 }

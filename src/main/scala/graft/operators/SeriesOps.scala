@@ -444,64 +444,67 @@ object SeriesOps {
 
   /** Forward-fill (`Series.ffill`, main.py:1240). */
   def ffill(df: DataFrame, s: Series, value: String, out: String): DataFrame =
-    df.withColumn(out, last(col(value), ignoreNulls = true)
-      .over(s.ordered.rowsBetween(Window.unboundedPreceding, 0)))
+    df.withColumn(out, last(col(value), ignoreNulls = true).over(s.running))
 
-  /** Zero-order-hold interpolation of nulls (`method='zero'`,
-    * dialogs.py:49): each null takes the previous non-null value (a
-    * step function, like scipy's zero-order spline); leading nulls
-    * clamp to the first non-null like the other variants
-    * (`limit_direction="both"`).
+  /** Bracket kernel: for each value column `i`, the previous and next
+    * non-null sample as `(v, t)` structs `__prev_i` / `__next_i`, both
+    * inclusive of the current row (a non-null row brackets itself).
+    *
+    * Both directions are RUNNING `last ignoreNulls` frames: "previous"
+    * over `s.ordered`, "next" over the exact reverse of that order
+    * (ascending sorts nulls first, descending nulls last, so the
+    * reversal holds on nullable tie columns too). A running frame
+    * evaluates incrementally, O(n) per series; the literal "next"
+    * frame, `first ignoreNulls` over [current, unboundedFollowing],
+    * re-aggregates the rest of the series for every row, O(n²). All
+    * columns go in one `select`, so the plan has two `Window` nodes
+    * (two sorts on one series shuffle) whatever the column count.
     */
-  def interpolateZero(df: DataFrame, s: Series, value: String, out: String): DataFrame = {
-    val v = col(value)
-    val before = s.ordered.rowsBetween(Window.unboundedPreceding, 0)
-    val after = s.ordered.rowsBetween(0, Window.unboundedFollowing)
-    val pv = last(v, ignoreNulls = true).over(before)
-    val nv = first(v, ignoreNulls = true).over(after)
-    df.withColumn(out, when(v.isNotNull, v).when(pv.isNotNull, pv).otherwise(nv))
+  private def withBrackets(df: DataFrame, s: Series, values: Seq[String]): DataFrame = {
+    val t = col(s.timeCol)
+    val next = Window.partitionBy(s.keyCols.map(col): _*).orderBy(s.orderCols.map(_.desc): _*)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val brackets = values.zipWithIndex.flatMap { case (value, i) =>
+      val v = col(value)
+      val sample = when(v.isNotNull, struct(v.as("v"), t.as("t")))
+      Seq(last(sample, ignoreNulls = true).over(s.running).as(s"__prev_$i"),
+        last(sample, ignoreNulls = true).over(next).as(s"__next_$i"))
+    }
+    s.colocate(df).select(col("*") +: brackets: _*)
   }
 
-  /** Nearest-neighbor interpolation of nulls (`method='nearest'`,
-    * dialogs.py:49): each null takes the value of the closer
-    * bracketing non-null on the time axis (ties → the earlier one);
-    * leading/trailing nulls clamp like the linear variant.
+  /** Gap interpolation of nulls (filter_engine.py:85-87; `method` of
+    * dialogs.py:49) for every `(value, out)` pair in one pass over the
+    * [[withBrackets]] kernel. Non-null samples pass through; a null
+    * takes, from its bracketing non-nulls on the time axis:
+    *  - `zero`: the previous value (zero-order hold, a step function);
+    *  - `nearest`: the closer one's value (ties → the earlier);
+    *  - `linear`: the lerp between them (a same-time bracket takes the
+    *    previous value).
+    * Leading and trailing nulls clamp to the nearest non-null in every
+    * method (`limit_direction="both"`). Out names must be distinct;
+    * each pair reads its value column as it was before this call.
     */
-  def interpolateNearest(df: DataFrame, s: Series, value: String, out: String): DataFrame = {
-    val v = col(value); val t = col(s.timeCol)
-    val before = s.ordered.rowsBetween(Window.unboundedPreceding, 0)
-    val after = s.ordered.rowsBetween(0, Window.unboundedFollowing)
-    val pv = last(v, ignoreNulls = true).over(before)
-    val pt = last(when(v.isNotNull, t), ignoreNulls = true).over(before)
-    val nv = first(v, ignoreNulls = true).over(after)
-    val nt = first(when(v.isNotNull, t), ignoreNulls = true).over(after)
-    df.withColumn(out,
-      when(v.isNotNull, v)
-        .when(pv.isNull, nv)
-        .when(nv.isNull, pv)
-        .when(t - pt <= nt - t, pv)
-        .otherwise(nv))
-  }
-
-  /** Linear interpolation of nulls with `limit_direction="both"`
-    * (filter_engine.py:85-87): interior nulls lerp between the
-    * bracketing non-nulls on the time axis; leading/trailing nulls
-    * clamp to the nearest non-null value.
-    */
-  def interpolateLinear(df: DataFrame, s: Series, value: String, out: String): DataFrame = {
-    val v = col(value); val t = col(s.timeCol)
-    val before = s.ordered.rowsBetween(Window.unboundedPreceding, 0)
-    val after = s.ordered.rowsBetween(0, Window.unboundedFollowing)
-    val pv = last(v, ignoreNulls = true).over(before)
-    val pt = last(when(v.isNotNull, t), ignoreNulls = true).over(before)
-    val nv = first(v, ignoreNulls = true).over(after)
-    val nt = first(when(v.isNotNull, t), ignoreNulls = true).over(after)
-    val lerp = pv + (nv - pv) * (t - pt) / (nt - pt)
-    df.withColumn(out,
-      when(v.isNotNull, v)
-        .when(pv.isNotNull && nv.isNotNull && nt =!= pt, lerp)
-        .when(pv.isNotNull && nv.isNotNull, pv) // degenerate same-time bracket
-        .when(pv.isNotNull, pv)                 // trailing edge
-        .otherwise(nv))                         // leading edge
+  def interpolate(df: DataFrame, s: Series, method: String,
+      channels: Seq[(String, String)]): DataFrame = {
+    val t = col(s.timeCol)
+    val fill: (Column, Column, Column, Column) => Column = method match {
+      case "zero" => (pv, _, nv, _) => when(pv.isNotNull, pv).otherwise(nv)
+      case "nearest" => (pv, pt, nv, nt) =>
+        when(pv.isNull, nv).when(nv.isNull, pv).when(t - pt <= nt - t, pv).otherwise(nv)
+      case "linear" => (pv, pt, nv, nt) =>
+        when(pv.isNotNull && nv.isNotNull && nt =!= pt, pv + (nv - pv) * (t - pt) / (nt - pt))
+          .when(pv.isNotNull, pv)
+          .otherwise(nv)
+      case other => throw new IllegalArgumentException(
+        s"unknown interpolate method '$other' (supported: zero, nearest, linear)")
+    }
+    val outs = channels.zipWithIndex.map { case ((value, out), i) =>
+      out -> when(col(value).isNotNull, col(value)).otherwise(fill(
+        col(s"__prev_$i.v"), col(s"__prev_$i.t"), col(s"__next_$i.v"), col(s"__next_$i.t")))
+    }
+    withBrackets(df, s, channels.map(_._1))
+      .withColumns(scala.collection.immutable.ListMap(outs: _*))
+      .drop(channels.indices.flatMap(i => Seq(s"__prev_$i", s"__next_$i")): _*)
   }
 }

@@ -249,4 +249,13 @@ class CorpusApiSpec extends AnyFunSuite {
       .orderBy("shard").collect().map(_.toSeq).toSeq
     assert(tot1Stored == tot1Rebuild, "stored gen-1 totals diverge from a gen-1 rebuild")
   }
+
+  test("empty input: no pairs and no documents give empty results, not a null-row error") {
+    val cc = graft.operators.Dedup.connectedComponents(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
+    assert(cc.columns.toSeq == Seq("d", "lab") && cc.isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    docs.limit(0).write.parquet(s"$dir/documents.parquet")
+    val neg = graft.operators.CorpusOps.q216NegativePairs.fn(spark, dir)
+    assert(neg.columns.toSeq == Seq("doc_id", "k", "neg_id") && neg.isEmpty)
+  }
 }

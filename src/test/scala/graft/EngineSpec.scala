@@ -2,7 +2,7 @@ package graft
 
 import graft.engine._
 import graft.engine.Recipes.Op
-import graft.operators.{SeriesOps, SignalKernels}
+import graft.operators.{Resample, SeriesOps, SignalKernels}
 import graft.operators.SeriesOps.Series
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -349,7 +349,7 @@ class EngineSpec extends AnyFunSuite {
     val d = Seq((1L, 0L, 0.0, Some(1.0)), (1L, 1L, 1.0, None),
       (1L, 2L, 4.0, Some(4.0)), (1L, 3L, 6.0, None), (1L, 4L, 8.0, Some(2.0)))
       .toDF("user_id", "event_id", "tn", "value")
-    val near = SeriesOps.interpolateNearest(d, s, "value", "o")
+    val near = SeriesOps.interpolate(d, s, "nearest", Seq("value" -> "o"))
       .orderBy("tn").select("o").collect().map(_.getDouble(0)).toSeq
     assert(near == Seq(1.0, 1.0, 4.0, 4.0, 2.0)) // tn=1 closer to 0; tn=6 tie->earlier
     // cubic on exactly-linear knots reproduces the line at gaps
@@ -387,7 +387,7 @@ class EngineSpec extends AnyFunSuite {
     val z = Seq((1L, 0L, 0.0, None), (1L, 1L, 1.0, Some(7.0)), (1L, 2L, 2.0, None),
       (1L, 3L, 3.0, Some(9.0)), (1L, 4L, 4.0, None))
       .toDF("user_id", "event_id", "tn", "value")
-    val zr = SeriesOps.interpolateZero(z, s, "value", "o")
+    val zr = SeriesOps.interpolate(z, s, "zero", Seq("value" -> "o"))
       .orderBy("tn").select("o").collect().map(_.getDouble(0)).toSeq
     assert(zr == Seq(7.0, 7.0, 7.0, 9.0, 9.0))
     // slinear dispatches to the linear path (first-order spline ≡
@@ -494,6 +494,26 @@ class EngineSpec extends AnyFunSuite {
     val auto = FilterEngine.apply(spark, d.filter(col("user_id") === 1L), s, Seq("a", "b"),
       FilterSpec.ResampleAuto)
     assert(auto.columns.toSeq == Seq("user_id", "tn", "a", "b"))
+    // every interpolation and resample runs on running frames: no
+    // optimized plan holds a frame that ends at the series' end (a
+    // `first` over [current, end] re-aggregates per row, O(n²)), and
+    // the Window count does not grow with the channel count
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing}
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+    def plan(x: DataFrame) = x.queryExecution.optimizedPlan
+    def toEnd(x: DataFrame) = plan(x).flatMap(_.expressions.flatMap(_.collect {
+      case f: SpecifiedWindowFrame if f.upper == UnboundedFollowing => f
+    }))
+    def windows(x: DataFrame) = plan(x).collect { case w: WindowNode => w }.size
+    val one = Resample.resampleFrame(d, s, Seq("a"), Nil, Nil, 0.25)
+    val three = Resample.resampleFrame(d, s, Seq("a", "b", "c"), Nil, Nil, 0.25)
+    val probes = d.select(col("user_id"), (col("tn") + 0.05).as("tn"))
+    val interps = Seq("zero", "nearest", "linear")
+      .map(m => SeriesOps.interpolate(d, s, m, Seq("a" -> "a", "c" -> "o")))
+    (interps ++ Seq(one, three, both, Resample.interpolateAt(d, probes, s, "c", "o")))
+      .foreach(x => assert(toEnd(x).isEmpty, plan(x)))
+    assert(windows(one) == windows(three) && windows(one) == 2)
+    interps.foreach(x => assert(windows(x) == 2))
     // a scoped resample is a named error, not an unresolved column
     val e = intercept[IllegalArgumentException] {
       FilterEngine.apply(spark, d, s, Seq("a"), FilterSpec.ResampleTo(0.25), Some((0.5, 1.5)))

@@ -122,14 +122,63 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Plain-Scala gap fill over one series sorted by (t, i): the
+    * bracketing non-nulls of each row, inclusive of the row itself.
+    */
+  private def refInterpolate(method: String, rows: Seq[(Double, Option[Double])]): Seq[Option[Double]] =
+    rows.indices.map { j =>
+      val (t, v) = rows(j)
+      val prev = rows.take(j + 1).reverse.collectFirst { case (pt, Some(pv)) => (pv, pt) }
+      val next = rows.drop(j).collectFirst { case (nt, Some(nv)) => (nv, nt) }
+      v.orElse((method, prev, next) match {
+        case (_, None, n) => n.map(_._1)
+        case ("zero", Some((pv, _)), _) => Some(pv)
+        case (_, Some((pv, _)), None) => Some(pv)
+        case ("nearest", Some((pv, pt)), Some((nv, nt))) => Some(if (t - pt <= nt - t) pv else nv)
+        case (_, Some((pv, pt)), Some((nv, nt))) =>
+          Some(if (nt != pt) pv + (nv - pv) * (t - pt) / (nt - pt) else pv)
+      })
+    }
+
   test("interpolate is total whenever any value is non-null") {
-    forSamples(Gen.listOfN(12, Gen.option(Gen.chooseNum(-50.0, 50.0))), 8) { vs =>
-      if (vs.exists(_.isDefined)) {
-        val df = vs.zipWithIndex.map { case (v, i) => (1L, i.toLong, i * 1.0, v) }
-          .toDF("k", "i", "t", "v")
-        val n = SeriesOps.interpolateLinear(df, s, "v", "li")
-          .filter(col("li").isNull).count()
-        assert(n == 0)
+    // two series per frame; times repeat (equal times split by the tie
+    // column i), values come in null runs; plus the edge shapes
+    val seriesGen: Gen[List[(Double, Option[Double])]] = for {
+      n <- Gen.chooseNum(1, 30)
+      steps <- Gen.listOfN(n, Gen.oneOf(0.0, 0.0, 0.5, 1.25))
+      runs <- Gen.listOfN(n, Gen.chooseNum(0, 4))
+      vs <- Gen.listOfN(n, Gen.chooseNum(-50.0, 50.0))
+    } yield steps.scanLeft(0.0)(_ + _).tail.zip(runs.zip(vs).map {
+      case (r, v) => if (r < 2) None else Some(v)
+    })
+    val edges = List(
+      List((0.0, Some(3.0))), List((0.0, None)), List((0.0, None), (1.0, None), (1.0, None)),
+      List((1.0, Some(2.0)), (1.0, None), (1.0, Some(8.0)), (2.0, None)))
+    val cases = (0 until 12).flatMap(i => seriesGen(Gen.Parameters.default, Seed(42L + i)))
+      .grouped(2).map(_.toList).toList ++ edges.map(e => List(e, e.reverse.map(_.copy(_1 = 0.0))))
+    cases.foreach { series =>
+      val df = series.zipWithIndex.flatMap { case (rows, k) =>
+        rows.zipWithIndex.map { case ((t, v), i) => (k.toLong, i.toLong, t, v) }
+      }.toDF("k", "i", "t", "v")
+      for (m <- Seq("zero", "nearest", "linear")) {
+        val got = SeriesOps.interpolate(df, s, m, Seq("v" -> "o"))
+          .orderBy("k", "t", "i").select("k", "o").collect()
+          .groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(r => Option(r.get(1))).toSeq }
+        series.zipWithIndex.foreach { case (rows, k) =>
+          assert(got(k.toLong) == refInterpolate(m, rows), s"$m on $rows")
+          if (rows.exists(_._2.isDefined)) assert(got(k.toLong).forall(_.isDefined))
+        }
+      }
+      // probes on every sample time, between them and past both ends
+      // read the linear fill of the same union (np.interp semantics)
+      val probes = df.select(col("k"), col("t")).union(df.select(col("k"), col("t") + 0.25))
+        .union(df.select(col("k"), col("t") - 2.0)).distinct()
+      val at = graft.operators.Resample.interpolateAt(df, probes, s, "v", "o")
+        .orderBy("k", "t").collect().map(r => (r.getLong(0), r.getDouble(1), Option(r.get(2))))
+      at.foreach { case (k, t, o) =>
+        val (before, after) = series(k.toInt).filter(_._2.isDefined).partition(_._1 <= t)
+        val expect = refInterpolate("linear", (before :+ ((t, None))) ++ after)(before.size)
+        assert(o == expect, s"interpolateAt($t) on ${series(k.toInt)}")
       }
     }
   }

@@ -117,7 +117,7 @@ class SeriesOpsSpec extends AnyFunSuite {
     val d = Seq((1L, 0L, 0.0, None), (1L, 1L, 1.0, Some(1.0)),
       (1L, 2L, 2.0, None), (1L, 3L, 3.0, Some(3.0)))
       .toDF("k", "i", "t", "v")
-    approx(out(SeriesOps.interpolateLinear(d, s, "v", "li"), "li"),
+    approx(out(SeriesOps.interpolate(d, s, "linear", Seq("v" -> "li")), "li"),
       Seq(1.0, 1.0, 2.0, 3.0))
   }
 
