@@ -74,15 +74,16 @@ object CacheScope {
     ds
   }
 
-  /** Eager `localCheckpoint()` with scope-recorded ownership: the
+  /** `localCheckpoint()` with scope-recorded ownership: the
     * checkpointed RDD has no catalog entry to unpersist through, so
     * its id (read off the returned plan's LogicalRDD leaf — precise,
     * not a global-map diff) is recorded with the innermost scope and
     * released by id at scope exit. Outside a scope this is exactly
-    * `ds.localCheckpoint()`.
+    * `ds.localCheckpoint(eager)`. A lazy checkpoint is filled, and
+    * its lineage cut, by the first action that reads all of it.
     */
-  def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
-    val cp = ds.localCheckpoint()
+  def checkpoint[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
+    val cp = ds.localCheckpoint(eager)
     frames.get() match {
       case f :: _ =>
         org.apache.spark.sql.GraftExpressionBridge.checkpointedRddId(cp)

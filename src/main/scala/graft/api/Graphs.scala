@@ -14,7 +14,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Scale shapes: PageRank/BFS/k-core iterate one shuffle join + one
   * hash aggregate per round with scope-managed persists and lineage
-  * cuts every [[graft.operators.Graphs.CheckpointEvery]] rounds;
+  * cuts every [[graft.operators.Fixpoint.CheckpointEvery]] rounds;
   * triangle work is degree-oriented (wedge stage bounded by m^1.5)
   * with DOULION sampling and the √m degree split as the documented
   * 100 TB paths. Callers own the action: wrap build + action in

@@ -175,11 +175,15 @@ object FilterEngine {
 
   /** Apply `spec` to each channel in place (out column = channel),
     * optionally scoped to a `[start, end]` time selection. Channels are
-    * applied in list order, as a fold would; two specs are applied to
+    * applied in list order, as a fold would; three specs are applied to
     * all channels at once instead:
     *  - whole-series Savitzky–Golay smooths every channel in one
     *    projection (one pass per repeat of a listed channel, so a
     *    duplicate smooths again exactly as the fold did);
+    *  - whole-series zero, nearest, linear and slinear interpolation
+    *    fill every channel in one bracket pass (two sorts, whatever
+    *    the channel count); filling is idempotent, so a duplicate
+    *    channel is filled once;
     *  - resample interpolates every listed channel onto ONE shared
     *    grid, like the reference's resample of all numeric columns
     *    (filter_engine.py:148-170) — the frame becomes series keys,
@@ -192,6 +196,8 @@ object FilterEngine {
       case (Savgol(w, p), None) =>
         Iterator.iterate(channels)(cs => cs.diff(cs.distinct)).takeWhile(_.nonEmpty)
           .foldLeft(df)((d, cs) => SeriesOps.savgolChannels(d, s, cs.distinct.map(c => c -> c), w, p))
+      case (Interpolate(m @ ("nearest" | "zero" | "linear" | "slinear")), None) =>
+        SeriesOps.interpolate(df, s, bracketMethod(m), channels.distinct.map(c => c -> c))
       case (ResampleTo(step), None) =>
         Resample.resampleFrame(df, s, channels.distinct, Nil, Nil, step)
       case (ResampleAuto, None) =>
@@ -203,6 +209,9 @@ object FilterEngine {
         channels.foldLeft(df)((d, ch) => applyOne(spark, d, s, ch, spec, selection))
     }
   }
+
+  /** The bracket-kernel method of a reference interpolate method. */
+  private def bracketMethod(m: String): String = if (m == "slinear") "linear" else m
 
   private def applyOne(spark: SparkSession, df: DataFrame, s: Series, ch: String,
       spec: FilterSpec, selection: Option[(Double, Double)]): DataFrame =
@@ -244,9 +253,8 @@ object FilterEngine {
       // on the axis, so it shares the linear path by identity, not by
       // fallback. Unknown methods THROW — silently interpolating with
       // a different method than the recipe asked for is a wrong answer.
-      case Interpolate(m @ ("nearest" | "zero" | "linear")) =>
-        SeriesOps.interpolate(df, s, m, Seq(src -> out))
-      case Interpolate("slinear") => SeriesOps.interpolate(df, s, "linear", Seq(src -> out))
+      case Interpolate(m @ ("nearest" | "zero" | "linear" | "slinear")) =>
+        SeriesOps.interpolate(df, s, bracketMethod(m), Seq(src -> out))
       case Interpolate("cubic") =>
         withSrc(df, s, src, out)(SignalKernels.interpolateCubic(spark, _, s, _, _))
       case Interpolate("quadratic") =>

@@ -489,52 +489,43 @@ object Dedup {
 
   /** Min-label-propagation connected components over undirected pair
     * edges `(doc_a, doc_b)` → `(d, lab)` with `lab` = the component's
-    * minimum doc_id. Rounds needed = component diameter (tiny for
-    * dup clusters; the same loop is the standard Spark shape for CC
-    * at scale — alternating-star variants only matter for web-graph
-    * diameters). Convergence is checked with a single-row aggregate:
-    * per-node labels only ever decrease, so the label-sum is strictly
-    * decreasing until convergence (the previous round's sum is
-    * carried, not recomputed).
+    * minimum node id; ids are `Long` (doc ids) or `String` (q209's
+    * names). Rounds needed = component diameter (tiny for dup
+    * clusters; the same loop is the standard Spark shape for CC at
+    * scale — alternating-star variants only matter for web-graph
+    * diameters).
+    *
+    * Each round carries every node's previous label as `own` through
+    * the `min` aggregate, so one single-row aggregate per round both
+    * materializes the round and tests convergence: no row has
+    * `lab < own` (labels only ever decrease). Round 0's `own` is null,
+    * so the test holds at round 0 only for an empty pair set. A path
+    * longer than [[Fixpoint.MaxRounds]] is [[Fixpoint.NotConverged]].
     */
   private[graft] def connectedComponents(pairsIn: DataFrame): DataFrame = {
     val pairs = pairsIn.scopedPersistEager()
     val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionAll(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .scopedPersist()
-    var labels = pairs.select(col("doc_a").as("d"))
+    val noLabel = lit(null).cast(pairs.schema("doc_a").dataType)
+    val init = pairs.select(col("doc_a").as("d"))
       .unionAll(pairs.select(col("doc_b").as("d")))
       .distinct()
-      .withColumn("lab", col("d"))
-      .scopedPersist()
-    // an empty pair set has no labels: it converges at round 0
-    val init = labels.agg(count(lit(1)), coalesce(sum("lab"), lit(0L))).head()
-    var converged = init.getLong(0) == 0
-    var rounds = 0
-    var labSum = init.getLong(1)
-    while (!converged && rounds < 20) {
-      val step = labels
+      .select(col("d"), col("d").as("lab"), noLabel.as("own"))
+    val run = Fixpoint.iterate(init) { labels =>
+      labels.select(col("d"), col("lab"), col("lab").as("own"))
         .unionAll(edges.join(labels, edges("a") === labels("d"))
-          .select(col("b").as("d"), col("lab")))
-        .groupBy("d").agg(min("lab").as("lab"))
-      // long-diameter components: truncate lineage every k rounds so
-      // the label chain's plan depth stays bounded (same cadence as
-      // the Graphs loops)
-      val next =
-        if ((rounds + 1) % graft.operators.Graphs.CheckpointEvery == 0) graft.CacheScope.checkpoint(step)
-        else step.scopedPersist()
-      val nextSum = next.agg(sum("lab")).head().getLong(0)
-      labels.unpersist()
-      labels = next
-      converged = labSum == nextSum
-      labSum = nextSum
-      rounds += 1
+          .select(col("b").as("d"), col("lab"), noLabel.as("own")))
+        .groupBy("d").agg(min("lab").as("lab"), min("own").as("own"))
+    } { labels =>
+      labels.agg(count(when(col("own").isNull || col("lab") < col("own"), 1)))
+        .head().getLong(0) == 0
     }
-    // labels is persisted and fully materialized by the convergence
-    // actions; the intermediates can drop out of the cache now
+    // the labels are materialized by the convergence actions; the
+    // intermediates can drop out of the cache now
     pairs.unpersist()
     edges.unpersist()
-    labels
+    run.fixpoint("connected components").select("d", "lab")
   }
 
   /** Cluster-canonical selection: the step after q70 that a real

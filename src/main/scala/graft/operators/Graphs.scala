@@ -14,8 +14,8 @@ import graft.CacheScope.ScopedDataset
   * the edge list on the source key + one hash aggregate on the
   * destination key — the standard distributed PageRank step. A fixed
   * iteration count keeps the plan a finite chain; at 100 TB each
-  * iteration's rank vector is persisted (or checkpointed to break
-  * lineage) exactly like the CC loop's label relation.
+  * iteration's rank vector is checkpointed to break lineage, like
+  * the CC loop's label relation ([[Fixpoint.iterate]]).
   *
   * Determinism: ranks are EXACT INTEGER parts-per-million.
   * Contribution = `rank div out_degree` (integer), damping =
@@ -84,21 +84,6 @@ object Graphs {
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct()
 
-  /** Lineage-truncation cadence for the iterative loops. Persisting
-    * per round caps recomputation but the LOGICAL plan still grows a
-    * join per round — at real convergence depths (or a lost
-    * executor) the accumulated chain means quadratic analysis cost
-    * and a full-chain replay. Every k-th round the rank/frontier
-    * relation is `localCheckpoint`ed (eager), which materializes it
-    * AND cuts the plan back to a leaf, bounding lineage depth at k
-    * joins regardless of iteration count. k = 8 keeps the default
-    * 5/6-round queries on the single lazy chain (zero extra jobs); a
-    * production unbounded-convergence run on a cluster with dynamic
-    * allocation would use reliable `checkpoint` to a real dir
-    * instead (localCheckpoint state dies with its executor).
-    */
-  val CheckpointEvery = 8
-
   /** Integer-ppm PageRank over a symmetric edge list `(src, dst)`.
     * Every node (appearing as src or dst) starts at 1e6 ppm; after
     * each step ranks are re-damped; dangling nodes cannot exist in a
@@ -111,7 +96,7 @@ object Graphs {
     * nothing without reuse). Only the edge+degree relation, consumed
     * once per iteration, is persisted; the harness clears caches per
     * query, facade callers unpersist at their own scope. Past
-    * [[CheckpointEvery]] rounds the chain is cut by an eager
+    * [[Fixpoint.CheckpointEvery]] rounds the chain is cut by an eager
     * localCheckpoint, so deep runs keep a bounded plan.
     */
   def pageRankPpm(edges: DataFrame, iterations: Int = Iterations): DataFrame = {
@@ -126,7 +111,7 @@ object Graphs {
         .groupBy("node")
         .agg((lit(150000L) + expr("(85 * sum(c)) div 100")).as("rank_ppm"))
       // deep runs: cut the chain every k rounds (see CheckpointEvery)
-      if (i % CheckpointEvery == 0 && i < iterations) ranks = graft.CacheScope.checkpoint(ranks)
+      if (Fixpoint.cutsAt(i) && i < iterations) ranks = graft.CacheScope.checkpoint(ranks)
     }
     ranks
   }
@@ -549,7 +534,7 @@ object Graphs {
     * join of the current distance relation to the edges plus one
     * min-aggregate on the destination — the Pregel frontier step as
     * plain DataFrame ops (same per-layer pinning as [[pageRankPpm]],
-    * with lineage cut every [[CheckpointEvery]] rounds for deep
+    * with lineage cut every [[Fixpoint.CheckpointEvery]] rounds for deep
     * runs). Integer distances and min-aggregates are
     * order-insensitive ⇒ bit-deterministic.
     */
@@ -582,7 +567,7 @@ object Graphs {
       // driver-bound per-round action count. The last layer is
       // always counted so nothing reaches the union job cold.
       frontier =
-        if (i % CheckpointEvery == 0) graft.CacheScope.checkpoint(next)
+        if (Fixpoint.cutsAt(i)) graft.CacheScope.checkpoint(next)
         else {
           val p = next.scopedPersist()
           if (i % 2 == 0 || i == rounds) p.count()
@@ -651,39 +636,31 @@ object Graphs {
     * Scale shape per round: one hash aggregate on `src` (degree) +
     * two shuffle joins restricting the edge list — the standard
     * distributed peel. The edge relation is consumed twice per round
-    * (degree + restrict), so each round is materialized (persist, or
-    * a lineage-cutting localCheckpoint every [[CheckpointEvery]]);
-    * the materializing `count()` doubles as a FREE fixpoint check —
-    * peeling is monotone, so an unchanged edge count means every
-    * later round is identical and the loop exits with the exact
-    * fixed-`rounds` result the oracle replays.
+    * (degree + restrict), so the input and each round are
+    * materialized ([[Fixpoint.iterate]]); the materializing `count()`
+    * doubles as a FREE fixpoint check — peeling is monotone, so an
+    * unchanged edge count means every later round is identical and
+    * the loop exits with the exact fixed-`rounds` result the oracle
+    * replays. Stopping at `rounds` is that result, not an error.
     *
     * Determinism: membership and degrees are set/count facts — no
     * floats anywhere.
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = edges
     var prevCount = -1L
-    var i = 1
-    var done = false
-    while (i <= rounds && !done) {
+    Fixpoint.iterate(edges, rounds) { e =>
       val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("src")
-      val next = e.join(keep, "src")
+      e.join(keep, "src")
         .join(keep.withColumnRenamed("src", "dst"), "dst")
         .select("src", "dst")
-      // one count materializes the persisted round AND reads the
-      // fixpoint size (the previous extra p.count() was a second job
-      // per round for nothing)
-      val m = if (i % CheckpointEvery == 0) graft.CacheScope.checkpoint(next)
-        else next.scopedPersist()
-      val n = m.count()
-      if (n == prevCount) done = true
+    } { e =>
+      val n = e.count()
+      val same = n == prevCount
       prevCount = n
-      e = m
-      i += 1
-    }
-    e.groupBy("src").agg(count(lit(1)).as("core_deg"))
+      same
+    }.result
+      .groupBy("src").agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("node"), col("core_deg"))
   }
 

@@ -3,7 +3,6 @@ package graft.operators
 import graft.QueryDef
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
-import graft.CacheScope.ScopedDataset
 
 /** General relational surface (aggregation, multi-way joins, top-k,
   * ranking, anti-join). The reference engine is single-table
@@ -323,9 +322,8 @@ object Relational {
     * canonical-name pick (the cluster's lexicographic minimum) is
     * what a dedup pass would rewrite records to. The oracle replays
     * the closure with DuckDB's recursive-UNION walk (the q70
-    * pattern); the Spark loop iterates min-label joins to an exact
-    * fixpoint (labels only decrease, so an unchanged round is
-    * terminal — same contract as q183's monotone peel).
+    * pattern); the Spark side runs the same components loop as q70,
+    * [[Dedup.connectedComponents]], on the name pairs.
     *
     * Scale shape: per round one shuffle join + min aggregate on the
     * ENTITY relation (names, not instances); rounds = cluster
@@ -357,28 +355,9 @@ object Relational {
     val prs = a.join(b, Seq("blk"))
       .filter(col("na") < col("nb") &&
         levenshtein(col("na"), col("nb")) <= 3)
-      .select("na", "nb").scopedPersist()
-    val edges = prs.select(col("na").as("a"), col("nb").as("b"))
-      .unionAll(prs.select(col("nb").as("a"), col("na").as("b"))).scopedPersist()
-    var labels = prs.select(col("na").as("d")).unionAll(prs.select(col("nb").as("d")))
-      .distinct().withColumn("lab", col("d")).scopedPersist()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 40) {
-      val step = labels
-        .unionAll(edges.join(labels, edges("a") === labels("d"))
-          .select(col("b").as("d"), col("lab")))
-        .groupBy("d").agg(min("lab").as("lab")).scopedPersist()
-      changed = step.join(labels.withColumnRenamed("lab", "old"), Seq("d"))
-        .filter(col("lab") =!= col("old")).count()
-      // the change count fully materializes `step`, so the previous
-      // round's labels can leave the cache now instead of stacking up
-      // one relation per round until scope exit
-      labels.unpersist()
-      labels = step
-      rounds += 1
-    }
-    labels.select(col("d").as("name"), col("lab").as("canonical"))
+      .select(col("na").as("doc_a"), col("nb").as("doc_b"))
+    Dedup.connectedComponents(prs)
+      .select(col("d").as("name"), col("lab").as("canonical"))
       .join(n.select(col("p_name").as("name"), col("n_parts")), Seq("name"))
       .withColumn("cluster_parts",
         sum("n_parts").over(org.apache.spark.sql.expressions.Window.partitionBy("canonical")))

@@ -146,11 +146,7 @@ object Tables {
     * Batch-only: streaming plans keep their source partitioning.
     */
   def spread(df: DataFrame, key: String): DataFrame = {
-    // kill-switch for A/Bs and deploys where the source layout is
-    // known-good: -Dgraft.spread=off / SPARK_GRAFT_SPREAD=off
-    val enabled = sys.props.get("graft.spread")
-      .orElse(sys.env.get("SPARK_GRAFT_SPREAD")).forall(_ != "off")
-    if (!enabled || df.isStreaming) return df
+    if (df.isStreaming) return df
     val cores = df.sparkSession.sparkContext.defaultParallelism
     // physical-plan partition count of the (scan) subtree — computed
     // at plan-build time, no job runs

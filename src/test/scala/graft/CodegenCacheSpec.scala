@@ -16,8 +16,7 @@ class CodegenCacheSpec extends AnyFunSuite {
 
   test("every session builder applies the shared engine config") {
     val missing = "/nonexistent-sf-dir"
-    // ExplainAll and PlanAudit build from Explain.sessionConf, AbSpread
-    // from Bench.sessionConf
+    // ExplainAll and PlanAudit build from Explain.sessionConf
     val confs = Map(
       "Graft.sparkSession" -> Graft.sessionConf(),
       "TestSpark" -> TestSpark.conf,

@@ -250,6 +250,18 @@ class CorpusApiSpec extends AnyFunSuite {
     assert(tot1Stored == tot1Rebuild, "stored gen-1 totals diverge from a gen-1 rebuild")
   }
 
+  test("connected components run to the fixpoint or fail by name, never truncate") {
+    import graft.operators.{Dedup, Fixpoint}
+    def path(n: Long) = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val labels = Dedup.connectedComponents(path(30)).collect().map(_.getLong(1))
+    assert(labels.length == 30 && labels.forall(_ == 0L), labels.mkString(","))
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(path(Fixpoint.MaxRounds + 1L))
+    }
+    assert(e.isInstanceOf[Fixpoint.NotConverged])
+    assert(e.getMessage == s"connected components did not converge within ${Fixpoint.MaxRounds} rounds")
+  }
+
   test("empty input: no pairs and no documents give empty results, not a null-row error") {
     val cc = graft.operators.Dedup.connectedComponents(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
     assert(cc.columns.toSeq == Seq("d", "lab") && cc.isEmpty)

@@ -514,6 +514,19 @@ class EngineSpec extends AnyFunSuite {
       .foreach(x => assert(toEnd(x).isEmpty, plan(x)))
     assert(windows(one) == windows(three) && windows(one) == 2)
     interps.foreach(x => assert(windows(x) == 2))
+    // a whole-series interpolation fills every channel in that one
+    // bracket pass, equal to the per-channel fold (a repeated channel
+    // fills once: filling a filled channel changes nothing)
+    val gappy = d.withColumn("a", when(col("event_id") % 4 === 1, lit(null)).otherwise(col("a")))
+      .withColumn("b", when(col("event_id") % 3 === 0, lit(null)).otherwise(col("b")))
+    val chs = Seq("a", "c", "b", "c")
+    Seq("zero", "nearest", "linear", "slinear").foreach { m =>
+      val fused = FilterEngine.apply(spark, gappy, s, chs, FilterSpec.Interpolate(m))
+      val fold = chs.foldLeft(gappy)((acc, ch) =>
+        FilterEngine.apply(spark, acc, s, Seq(ch), FilterSpec.Interpolate(m)))
+      assert(windows(fused) == 2, m)
+      assert(fused.exceptAll(fold).isEmpty && fold.exceptAll(fused).isEmpty, m)
+    }
     // a scoped resample is a named error, not an unresolved column
     val e = intercept[IllegalArgumentException] {
       FilterEngine.apply(spark, d, s, Seq("a"), FilterSpec.ResampleTo(0.25), Some((0.5, 1.5)))

@@ -514,14 +514,41 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("connected components match a union-find reference, Long and String ids") {
+    // root = the component's smallest id: every union links the
+    // larger root under the smaller one
+    def unionFind(und: Set[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      und.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(k => k -> find(k)).toMap
+    }
+    def pad(x: Long) = f"$x%04d"
+    forSamples(graphGen, 6) { und =>
+      val want = unionFind(und)
+      val cc = graft.operators.Dedup.connectedComponents(und.toSeq.toDF("doc_a", "doc_b"))
+      assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want, s"graph=$und")
+      val padded = und.toSeq.map { case (a, b) => (pad(a), pad(b)) }.toDF("doc_a", "doc_b")
+      val ccStr = graft.operators.Dedup.connectedComponents(padded)
+      assert(ccStr.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+        want.map { case (k, v) => pad(k) -> pad(v) }, s"graph=$und")
+    }
+  }
+
   test("deep iterative graph runs keep a bounded plan (lineage cut every k rounds)") {
-    import graft.operators.Graphs
+    import graft.operators.{Fixpoint, Graphs}
     val n = 20L
     val path = (0L until n - 1).map(i => (i, i + 1))
     val sym = path.flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val edges = sym.toDF("src", "dst")
     val iters = 12
-    assert(iters > Graphs.CheckpointEvery, "test must cross the checkpoint cadence")
+    assert(iters > Fixpoint.CheckpointEvery, "test must cross the checkpoint cadence")
     val pr = Graphs.pageRankPpm(edges, iters)
     // past the cut, the optimized plan holds only the post-checkpoint
     // rounds — without truncation it would carry one logical Join per
@@ -529,7 +556,7 @@ class PropertySpec extends AnyFunSuite {
     // InMemoryRelation dumps)
     val planStr = pr.queryExecution.optimizedPlan.toString
     val joins = "(?<![A-Za-z])Join\\b".r.findAllIn(planStr).size
-    assert(joins <= Graphs.CheckpointEvery,
+    assert(joins <= Fixpoint.CheckpointEvery,
       s"pageRank lineage not truncated: $joins joins at $iters rounds")
     assert(planStr.contains("LogicalRDD"), "no checkpoint leaf in the deep plan")
     // integer brute force with the identical div/damping op order
@@ -549,6 +576,29 @@ class PropertySpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
     val want = (0L until n).map(k => k -> (if (k <= iters) Some(k) else None)).toMap
     assert(gotH == want)
+    // the converging loops run past the cadence too: components needs
+    // 20 rounds on the path, and a path has no 2-core, which the peel
+    // reaches at round 10 and confirms at round 11. Each of their
+    // rounds is a checkpoint leaf whose lineage the convergence
+    // action has cut; distinct joins in the analyzed plan count the
+    // rounds since the last cut (a round's relation appears there
+    // once per read)
+    def lineage(x: org.apache.spark.sql.DataFrame): (Int, Boolean) = {
+      val p = x.queryExecution.analyzed
+      (p.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.distinct.size,
+        p.collectLeaves().exists {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.isCheckpointed
+          case _ => false
+        })
+    }
+    val cc = graft.operators.Dedup.connectedComponents(path.toDF("doc_a", "doc_b"))
+    val core = Graphs.kCore(edges, 2, iters)
+    for ((name, x) <- Seq("components" -> cc, "k-core" -> core)) {
+      val (ccJoins, cut) = lineage(x)
+      assert(cut && ccJoins <= Fixpoint.CheckpointEvery, s"$name: $ccJoins joins, cut=$cut")
+    }
+    assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == (0L until n).map(_ -> 0L).toMap)
+    assert(core.isEmpty)
   }
 
   test("kmv set algebra is exact below k for random token sets") {
