@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Owner-scoped cache lifecycle for lazy query builders.
   *
@@ -59,9 +60,14 @@ object CacheScope {
   }
 
   /** Persist `ds` (default storage level) and register it with the
-    * innermost active scope, if any.
+    * innermost active scope, if any. A plan that is already cached is
+    * left alone and not registered: the entry belongs to whoever
+    * cached it (a caller's input, an outer scope), and Spark's
+    * `persist` on a cached plan only logs, so tracking it here would
+    * let this scope's exit unpersist the owner's cache.
     */
-  def persist[T](ds: Dataset[T]): Dataset[T] = track(ds.persist())
+  def persist[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.storageLevel == StorageLevel.NONE) track(ds.persist()) else ds
 
   /** Register an already-persisted dataset with the innermost active
     * scope (no-op outside a scope).

@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.functions.VectorMath
+import graft.operators.BoundedPairs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,69 +72,40 @@ object Vectors {
     * a hyperplane bucket are compared; pairs at or above `minCos`
     * survive. Returns `(vec_a, vec_b, cos_sim)`.
     *
-    * `cellTarget` is the q48 scale knob made explicit: `Some(t)`
-    * sub-splits each bucket into `B = ceil(|bucket|/t)` deterministic
-    * md5 cells and compares within cells only, bounding pair work at
-    * n·t (linear) at the cost of skipping cross-cell pairs once
-    * B > 1; `None` scans every within-bucket pair — EXACT at bucket
-    * granularity, Θ(Σ|bucket|²) work, which on a skewed 100 TB bucket
-    * is the quadratic blowup the knob exists to bound. The DEFAULT is
-    * the declared q48 production bound ([[graft.operators.Similarity
-    * .NearDupCellTarget]]), the SAME default [[nearDupCellAudit]]
-    * describes — so a caller running both with defaults reads an
-    * audit of the bound the pair scan actually applies; pass
-    * `cellTarget = None` explicitly to accept the quadratic exact
-    * scan. The audit reports each bucket's B so a caller can SEE
-    * whether the bound engaged (B > 1 anywhere means cross-cell pairs
-    * were skipped and recall < 1) before trusting the output.
+    * `cellTarget` picks the [[graft.operators.BoundedPairs]] mode:
+    * `Some(t)` is `Cells(t)`, within-cell pairs of `ceil(|bucket|/t)`
+    * md5 cells per bucket, n·t work but cross-cell pairs skipped once
+    * a bucket outgrows `t`; `None` is `Exact`, every within-bucket pair
+    * (hot buckets block-joined), Θ(Σ|bucket|²) work, the quadratic
+    * blowup a skewed 100 TB bucket hits. The default is the declared
+    * q48 bound ([[graft.operators.Similarity.NearDupCellTarget]]), the
+    * same default [[nearDupCellAudit]] reports on, so the no-argument
+    * audit shows whether the no-argument scan skipped pairs.
     */
   def nearDupPairs(df: DataFrame, minCos: Double = 0.999,
       cellTarget: Option[Long] =
         Some(graft.operators.Similarity.NearDupCellTarget)): DataFrame = {
     val bk = hyperplaneBuckets(df).select("bucket", "vec_id", "embedding").scopedPersist()
-    val cells = cellTarget match {
-      case None => bk.withColumn("cell", lit(0L))
-      case Some(t) =>
-        // per-bucket counts are a ≤256-row relation: broadcast back
-        // and assign md5 cells, exactly the declared q48 shape
-        val sizes = bk.groupBy("bucket").agg(count(lit(1)).as("bn"))
-        bk.join(broadcast(sizes), Seq("bucket"))
-          .withColumn("cell",
-            graft.functions.TextHash.base32Builtin(col("vec_id").cast("string"))
-              % expr(s"(bn + ${t - 1}) div $t"))
-    }
-    // each side rename-projects BEFORE the join: dataset-alias self
-    // joins (`bk.as("x")`) resolve both `x.vec_id` and `y.vec_id` to
-    // the same attribute under some cached/reused plans, silently
-    // turning `x < y` into `v < v` = empty (observed flipping with
-    // driver heap size via plan-reuse differences)
-    val left = cells.select(col("bucket"), col("cell"), col("vec_id").as("vec_a"),
-      col("embedding").as("emb_a"))
-    val right = cells.select(col("bucket"), col("cell"), col("vec_id").as("vec_b"),
-      col("embedding").as("emb_b"))
-    left.join(right, Seq("bucket", "cell"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(cosine("emb_a", "emb_b"), 6).as("cos_sim"))
+    val mode = cellTarget.fold[BoundedPairs.Mode](BoundedPairs.Exact())(BoundedPairs.Cells(_))
+    BoundedPairs(bk, Seq("bucket"), "vec_id", Seq("embedding"), mode)
+      .select(col("vec_id_a").as("vec_a"), col("vec_id_b").as("vec_b"),
+        round(cosine("embedding_a", "embedding_b"), 6).as("cos_sim"))
       .filter(col("cos_sim") >= minCos)
   }
 
   /** Per-bucket cell-bound observability for [[nearDupPairs]] /
-    * q48-class scans: for each LSH bucket, its row count and the
-    * number of md5 cells `B = ceil(n/cellTarget)` the pair scan would
-    * use. Any row with `n_cells > 1` means the linear-cost bound is
-    * ENGAGED there and cross-cell pairs in that bucket are skipped
-    * (recall < 1); all-1 means the split is a no-op and the result is
-    * bit-identical to the exact bucket scan. One narrow projection +
-    * a ≤256-row aggregate — safe to run ahead of any production scan.
-    * The default `cellTarget` matches [[nearDupPairs]]'s default, so
-    * the no-argument audit describes the no-argument pair scan.
+    * q48-class scans: each LSH bucket's row count `n` and its md5 cell
+    * count `n_cells` ([[graft.operators.BoundedPairs.cellCount]], the
+    * count the `Cells` scan applies). `n_cells > 1` means the bound is
+    * ENGAGED there and cross-cell pairs are skipped (recall < 1); all-1
+    * means the result equals the `Exact` scan. One projection and a
+    * ≤256-row aggregate, safe to run ahead of any production scan.
     */
   def nearDupCellAudit(df: DataFrame,
       cellTarget: Long = graft.operators.Similarity.NearDupCellTarget): DataFrame =
     hyperplaneBuckets(df)
       .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .withColumn("n_cells", expr(s"(n + ${cellTarget - 1}) div $cellTarget"))
+      .withColumn("n_cells", BoundedPairs.cellCount("n", cellTarget))
       .withColumn("cell_bound_engaged", col("n_cells") > 1)
 
   /** Assign each row its nearest coarse centroid(s): argmin L2 over a

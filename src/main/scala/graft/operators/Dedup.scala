@@ -5,6 +5,7 @@ import graft.functions.TextHash
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.CacheScope.ScopedDataset
 
 /** Document deduplication for large-scale training-data pipelines:
@@ -17,8 +18,8 @@ import graft.CacheScope.ScopedDataset
   * the corpus); the only shuffles are the ones dedup fundamentally
   * needs (group-by text hash for exact dedup, the LSH bucket join for
   * candidate generation). At 100 TB the bucket join is an equi-join
-  * on (band, key) — hash-partitionable, skew handled by AQE — never
-  * an all-pairs comparison.
+  * on (band, key) — hash-partitionable, hot keys block-joined by
+  * [[BoundedPairs]] — never an all-pairs comparison.
   */
 object Dedup {
 
@@ -86,78 +87,20 @@ object Dedup {
            |  struct(b as band, concat_ws(',', slice(sig, b * $BandRows + 1, $BandRows)) as key))""".stripMargin)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
 
-  /** A band key counts as skewed above this many member docs; the
-    * blocked self-join spreads its pair workload over this many
-    * id-hash shards.
-    */
-  private[graft] val HotKeyThreshold = 4096L
-  private[graft] val SkewShards = 16
-
-  /** Candidate near-dup pairs: docs sharing any full LSH band.
-    * The band-key relation feeds the hot-key aggregate plus both
-    * sides of each self-join; the shingle-hash table underneath it IS
-    * persisted ([[hashedFromDocs]]), so each reference recomputes
-    * only the in-memory minhash/banding projection — a deliberate
-    * CPU-for-cache-pressure trade measured cheaper than pinning the
-    * banded table at bench scale. At production scale neither cache
-    * is the answer: [[materializeSignatures]] writes the signature
-    * relation to parquet once and every stage bucket-joins it (the
-    * standard MinHash-LSH shape).
-    *
-    * Skew guard: a degenerate corpus (say half the docs identical)
-    * funnels its whole m² pair workload through ONE reducer if the
-    * hot band key is joined plainly, and AQE can only split what the
-    * partitioner spread. Keys above [[HotKeyThreshold]] members are
-    * self-joined block-wise instead: members are id-hashed into
-    * [[SkewShards]] shards and each shard-pair block (i ≤ j) joins
-    * independently, so the hot key's work lands on ~S²/2 reducers.
-    * Cold keys take the plain equi-join. The emitted pair set is
-    * identical either way (spec-pinned).
+  /** Candidate near-dup pairs: docs sharing any full LSH band — the
+    * [[BoundedPairs.Exact]] self-join on `(band, key)`, collapsed
+    * across bands by one `distinct`. Each reference to the band-key
+    * relation recomputes only the in-memory banding projection over
+    * the persisted shingle hashes ([[hashedFromDocs]]), measured
+    * cheaper than pinning the banded table at bench scale; at
+    * production scale [[materializeSignatures]] writes the signature
+    * relation to parquet once instead.
     */
   private[graft] def lshPairsFrom(bandKeysDf: DataFrame,
-      hotThreshold: Long = HotKeyThreshold, shards: Int = SkewShards): DataFrame = {
-    // Hot keys are by definition FEW (≤ rows/threshold), so they are
-    // found with a map-side-combined aggregate and broadcast back as
-    // the hot/cold tag — NOT a count().over(band,key) window, which
-    // would shuffle every band-key row just to compute a count a
-    // broadcast could carry (the round-3 window tag cost q42/q43
-    // 2.4–3.2× at sf0.1). The common case (zero hot keys) broadcasts
-    // an empty relation and the anti join is a no-op scan.
-    val hotKeys = bandKeysDf.groupBy("band", "key")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > hotThreshold)
-      .select("band", "key")
-    val cold = bandKeysDf.join(broadcast(hotKeys), Seq("band", "key"), "left_anti")
-    // rename-projected sides, not dataset aliases: `cold.as("x")`
-    // self joins can resolve both sides to one attribute under plan
-    // reuse (see api.Vectors.nearDupPairs) — rename first, always
-    val coldPairs = cold.select(col("band"), col("key"), col("doc_id").as("doc_a"))
-      .join(cold.select(col("band"), col("key"), col("doc_id").as("doc_b")),
-        Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-    val hot = bandKeysDf.join(broadcast(hotKeys), Seq("band", "key"), "left_semi")
-      .withColumn("s", pmod(hash(col("doc_id")), lit(shards)))
-    // doc in shard s joins as LEFT of blocks (s, s..S-1) and RIGHT of
-    // blocks (0..s, s): every cross-shard pair meets in exactly one
-    // block, same-shard pairs in two (collapsed by the final distinct)
-    val left = hot.withColumn("j", explode(expr(s"sequence(s, ${shards - 1})")))
-      .select(col("band"), col("key"), col("doc_id").as("did_a"),
-        col("s").as("s_a"), col("j").as("j_a"))
-    val right = hot.withColumn("i", explode(expr("sequence(0, s)")))
-      .select(col("band").as("band_b"), col("key").as("key_b"),
-        col("doc_id").as("did_b"), col("s").as("s_b"), col("i").as("i_b"))
-    // all four equalities stay in the join condition so the hash join
-    // keys on (band, key, shard-block) — pushing the shard match to a
-    // post-join filter would undo the blocking
-    val hotPairs = left.join(right,
-        col("band") === col("band_b") && col("key") === col("key_b") &&
-          col("s_a") === col("i_b") && col("j_a") === col("s_b") &&
-          col("did_a") =!= col("did_b"))
-      .select(least(col("did_a"), col("did_b")).as("doc_a"),
-        greatest(col("did_a"), col("did_b")).as("doc_b"))
-    coldPairs.union(hotPairs).distinct()
-  }
+      mode: BoundedPairs.Exact = BoundedPairs.Exact()): DataFrame =
+    BoundedPairs(bandKeysDf, Seq("band", "key"), "doc_id", mode = mode)
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"))
+      .distinct()
 
   private def lshPairs(spark: SparkSession, dir: String): DataFrame =
     lshPairsFrom(bandKeys(spark, dir))
@@ -428,15 +371,10 @@ object Dedup {
       .select(col("doc_id"), simhashCol.as("simhash"))
       .withColumn("bkt", expr("simhash >> 20"))
       .scopedPersistEager() // self-joined
-    // rename-projected sides, not dataset aliases (see
-    // api.Vectors.nearDupPairs for the plan-reuse resolution trap)
-    b.select(col("bkt"), col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
-      .join(b.select(col("bkt"), col("doc_id").as("doc_b"), col("simhash").as("sh_b")),
-        Seq("bkt"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", expr("bit_count(sh_a ^ sh_b)"))
+    BoundedPairs(b, Seq("bkt"), "doc_id", Seq("simhash"))
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+        expr("bit_count(simhash_a ^ simhash_b)").as("hamming"))
       .filter(col("hamming") <= 8)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -503,6 +441,8 @@ object Dedup {
     * longer than [[Fixpoint.MaxRounds]] is [[Fixpoint.NotConverged]].
     */
   private[graft] def connectedComponents(pairsIn: DataFrame): DataFrame = {
+    // a pair set the caller cached stays cached: it is theirs to drop
+    val ownPairs = pairsIn.storageLevel == StorageLevel.NONE
     val pairs = pairsIn.scopedPersistEager()
     val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionAll(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
@@ -523,7 +463,7 @@ object Dedup {
     }
     // the labels are materialized by the convergence actions; the
     // intermediates can drop out of the cache now
-    pairs.unpersist()
+    if (ownPairs) pairs.unpersist()
     edges.unpersist()
     run.fixpoint("connected components").select("d", "lab")
   }

@@ -288,9 +288,11 @@ object Relational {
     * this decision table joined back on name — a fan-out the caller
     * sizes, not a default cost.
     *
-    * Scale shape: aggregate → blocked equi self-join of the name
-    * relation (hot blocks take the q42 salting treatment — the
-    * block key is just a join key) → integer filter.
+    * Scale shape: aggregate → [[BoundedPairs.Exact]] self-join of
+    * the name relation on `blk` (String ids; a block above
+    * `HotKeyThreshold` names, found by one broadcast aggregate, is
+    * block-joined over id-hash shards, the same guard as q42's band
+    * keys) → integer filter.
     */
   val q195FuzzyMatch: QueryDef = QueryDef.sql(
     "q195_fuzzy_match",
@@ -305,13 +307,11 @@ object Relational {
     val n = Tables.part(spark, dir)
       .groupBy("p_name").agg(count(lit(1)).as("n_parts"))
       .withColumn("blk", split(col("p_name"), " ").getItem(0))
-    val a = n.select(col("p_name").as("name_a"), col("n_parts").as("n_a"), col("blk"))
-    val b = n.select(col("p_name").as("name_b"), col("n_parts").as("n_b"), col("blk"))
-    a.join(b, Seq("blk"))
-      .filter(col("name_a") < col("name_b"))
-      .withColumn("dist", levenshtein(col("name_a"), col("name_b")).cast("long"))
+    BoundedPairs(n, Seq("blk"), "p_name", Seq("n_parts"))
+      .withColumn("dist", levenshtein(col("p_name_a"), col("p_name_b")).cast("long"))
       .filter(col("dist") <= 3)
-      .select("name_a", "name_b", "dist", "n_a", "n_b")
+      .select(col("p_name_a").as("name_a"), col("p_name_b").as("name_b"), col("dist"),
+        col("n_parts_a").as("n_a"), col("n_parts_b").as("n_b"))
       .orderBy("name_a", "name_b")
   }
 
@@ -325,9 +325,10 @@ object Relational {
     * pattern); the Spark side runs the same components loop as q70,
     * [[Dedup.connectedComponents]], on the name pairs.
     *
-    * Scale shape: per round one shuffle join + min aggregate on the
-    * ENTITY relation (names, not instances); rounds = cluster
-    * diameter (tiny for typo clusters).
+    * Scale shape: the name pairs are q195's [[BoundedPairs.Exact]]
+    * candidates on `blk`, verified to ≤ 3 edits; then per round one
+    * shuffle join + min aggregate on the ENTITY relation (names, not
+    * instances); rounds = cluster diameter (tiny for typo clusters).
     */
   val q209LinkageClusters: QueryDef = QueryDef.sql(
     "q209_linkage_clusters",
@@ -350,12 +351,9 @@ object Relational {
     val n = Tables.part(spark, dir)
       .groupBy("p_name").agg(count(lit(1)).as("n_parts"))
       .withColumn("blk", split(col("p_name"), " ").getItem(0))
-    val a = n.select(col("p_name").as("na"), col("blk"))
-    val b = n.select(col("p_name").as("nb"), col("blk"))
-    val prs = a.join(b, Seq("blk"))
-      .filter(col("na") < col("nb") &&
-        levenshtein(col("na"), col("nb")) <= 3)
-      .select(col("na").as("doc_a"), col("nb").as("doc_b"))
+    val prs = BoundedPairs(n, Seq("blk"), "p_name")
+      .filter(levenshtein(col("p_name_a"), col("p_name_b")) <= 3)
+      .select(col("p_name_a").as("doc_a"), col("p_name_b").as("doc_b"))
     Dedup.connectedComponents(prs)
       .select(col("d").as("name"), col("lab").as("canonical"))
       .join(n.select(col("p_name").as("name"), col("n_parts")), Seq("name"))

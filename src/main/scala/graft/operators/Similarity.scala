@@ -202,13 +202,13 @@ object Similarity {
 
   /** q48/q240 builder. The fixed 8-bit LSH bucket alone leaves an
     * n²/256 pair scan (measured exp 1.6 on the honest sf1 fixture),
-    * so buckets sub-split into md5 CELLS of ≤ `cellTarget` vectors —
-    * the q155 bound: pair work ≤ n·cellTarget, LINEAR at fixed
-    * target. B = ⌈|bucket|/512⌉ = 1 at every fixture scale (max
-    * bucket ~78 at sf1), so q48's output is unchanged there; the
-    * documented recall trade (cross-cell pairs in a hot bucket are
-    * skipped) only engages at the scales where the quadratic would
-    * otherwise kill the query. Norms precompute per ROW (the
+    * so buckets sub-split into md5 CELLS of ≤ `cellTarget` vectors
+    * ([[BoundedPairs.Cells]]) — the q155 bound: pair work
+    * ≤ n·cellTarget, LINEAR at fixed target. B = ⌈|bucket|/512⌉ = 1
+    * at every fixture scale (max bucket ~78 at sf1), so q48's output
+    * is unchanged there; the documented recall trade (cross-cell
+    * pairs in a hot bucket are skipped) only engages at the scales
+    * where the quadratic would otherwise kill the query. Norms precompute per ROW (the
     * interpreted higher-order fold per PAIR tripled the scan:
     * 42 s → 14 s at sf1; sqrt of the same double is bit-identical).
     */
@@ -233,23 +233,11 @@ object Similarity {
       val bk = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), bucketCol.as("bucket"))
         .scopedPersist()
-      val sizes = bk.groupBy("bucket").agg(count(lit(1)).as("bn"))
-      val cells = bk.join(broadcast(sizes), Seq("bucket"))
-        .withColumn("cell",
-          graft.functions.TextHash.base32Builtin(col("vec_id").cast("string"))
-            % expr(s"(bn + ${tgt - 1}) div $tgt"))
-      // rename-projected sides, not dataset aliases: a `bk.as("x")`
-      // self join can resolve both sides to one attribute under plan
-      // reuse (see api.Vectors.nearDupPairs) — rename first, always
-      val lhs = cells.select(col("bucket"), col("cell"), col("vec_id").as("keep_id"),
-        col("embedding").as("emb_a"), sqrt(normCol(col("embedding"))).as("na"))
-      val rhs = cells.select(col("bucket"), col("cell"), col("vec_id").as("dup_id"),
-        col("embedding").as("emb_b"), sqrt(normCol(col("embedding"))).as("nb"))
-      lhs.join(rhs, Seq("bucket", "cell"))
-        .filter(col("keep_id") < col("dup_id"))
-        .select(col("keep_id"), col("dup_id"),
-          round(dotCol(col("emb_a"), col("emb_b")) / (col("na") * col("nb")), 6)
-            .as("cos_sim"))
+      BoundedPairs(bk.withColumn("nrm", sqrt(normCol(col("embedding")))),
+          Seq("bucket"), "vec_id", Seq("embedding", "nrm"), BoundedPairs.Cells(tgt))
+        .select(col("vec_id_a").as("keep_id"), col("vec_id_b").as("dup_id"),
+          round(dotCol(col("embedding_a"), col("embedding_b")) /
+            (col("nrm_a") * col("nrm_b")), 6).as("cos_sim"))
         .filter(col("cos_sim") >= threshold)
         .orderBy("keep_id", "dup_id")
     }
@@ -748,15 +736,14 @@ object Similarity {
     * near-dup group survives as canonical.
     *
     * Scale shape: assignment is the q67 zero-shuffle codebook map;
-    * the pair scan is an equi self-join on (list_id, cell) where
-    * `cell` SUB-SPLITS each IVF list into deterministic md5 buckets
-    * of ≤ [[SemDedupCellTarget]] vectors (B = ⌈|list|/target⌉, from a
-    * K-row count broadcast). Without the cell split the self-join
-    * cost is Σ|cluster|² = Θ(n²/K) at FIXED K — a 10× corpus measured
-    * 76× (BENCH_NOTES round 6) because a driver-collected brute-force
-    * codebook cannot actually grow K with n. With it, per-cell pairs
-    * are ≤ target², so the whole scan is ≤ n·target — LINEAR in the
-    * corpus with a constant-size codebook. The trade: same-cluster
+    * the pair scan is [[BoundedPairs.Cells]] on `list_id`: each IVF
+    * list SUB-SPLITS into B = ⌈|list|/target⌉ md5 cells of
+    * ≤ [[SemDedupCellTarget]] vectors. Without the cell split the
+    * self-join cost is Σ|cluster|² = Θ(n²/K) at FIXED K — a 10× corpus
+    * measured 76× (BENCH_NOTES round 6) because a driver-collected
+    * brute-force codebook cannot actually grow K with n. With it,
+    * per-cell pairs are ≤ target², so the whole scan is ≤ n·target —
+    * LINEAR in the corpus with a constant-size codebook. The trade: same-cluster
     * pairs in different cells are not compared — a finer-grained
     * version of SemDeDup's own cluster-scoped approximation (the
     * paper's K≈100k serves exactly this cluster-size bound); below
@@ -815,25 +802,14 @@ object Similarity {
           element_at(nearestCol(spark, dir, 1, col("embedding")), 1).as("list_id"),
           col("embedding"))
         .scopedPersist()
-      // per-list counts are a K-row relation: broadcast them back and
-      // sub-split each list into B = ceil(ln/target) md5 cells
-      val sizes = asg.groupBy("list_id").agg(count(lit(1)).as("ln"))
-      val cells = asg.join(broadcast(sizes), Seq("list_id"))
-        .withColumn("cell",
-          graft.functions.TextHash.base32Builtin(col("vec_id").cast("string"))
-            % expr(s"(ln + ${tgt - 1}) div $tgt"))
       // norms are precomputed per ROW (sqrt once per vector, not per
       // pair) — bit-identical to the per-pair form, ~3x fewer flops
       // in the pair scan
-      val lhs = cells.select(col("list_id"), col("cell"), col("vec_id").as("lo_id"),
-        col("embedding").as("emb_a"), sqrt(normCol(col("embedding"))).as("na"))
-      val rhs = cells.select(col("list_id"), col("cell"), col("vec_id").as("vec_id"),
-        col("embedding").as("emb_b"), sqrt(normCol(col("embedding"))).as("nb"))
-      val close = lhs.join(rhs, Seq("list_id", "cell"))
-        .filter(col("lo_id") < col("vec_id"))
-        .filter(round(dotCol(col("emb_a"), col("emb_b")) /
-          (col("na") * col("nb")), 6) >= threshold)
-        .groupBy("vec_id").agg(count(lit(1)).as("n_close"))
+      val close = BoundedPairs(asg.withColumn("nrm", sqrt(normCol(col("embedding")))),
+          Seq("list_id"), "vec_id", Seq("embedding", "nrm"), BoundedPairs.Cells(tgt))
+        .filter(round(dotCol(col("embedding_a"), col("embedding_b")) /
+          (col("nrm_a") * col("nrm_b")), 6) >= threshold)
+        .groupBy(col("vec_id_b").as("vec_id")).agg(count(lit(1)).as("n_close"))
       asg.select("vec_id", "list_id")
         .join(close, Seq("vec_id"), "left")
         .withColumn("kept", col("n_close").isNull)

@@ -64,4 +64,23 @@ class GraphsApiSpec extends AnyFunSuite {
     assert(core.keySet == (1L to 5L).toSet ++ (8L to 12L).toSet)
     assert(core.values.forall(_ == 4L))
   }
+
+  test("a cache scope never releases a cache its caller owns") {
+    // builders persist their inputs inside the scope; an input the
+    // caller already cached is the caller's entry, not the scope's
+    val edges = symDf.cache()
+    val pairs = undDf.toDF("doc_a", "doc_b").cache()
+    try {
+      edges.count(); pairs.count()
+      val src = edges.agg(org.apache.spark.sql.functions.min("src").as("s"))
+      CacheScope.run(spark.sparkContext) {
+        api.Graphs.bfsHops(edges, src, 3).collect()
+        operators.Dedup.connectedComponents(pairs).collect()
+      }
+      assert(edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "bfsHops' scope released the caller's edge cache")
+      assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "connectedComponents released the caller's pair cache")
+    } finally { edges.unpersist(); pairs.unpersist() }
+  }
 }

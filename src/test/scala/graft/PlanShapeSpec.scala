@@ -89,12 +89,17 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("LSH skew guard tags hot keys by broadcast, never a whole-table window") {
     // the hot/cold split must come from a broadcast of the (few) hot
-    // band keys — a count().over(band,key) window here shuffles every
-    // band-key row and cost q42/q43 2.4-3.2x at sf0.1 (round 3)
-    val p = plan("q42_lsh_pairs")
-    assert(!p.contains("RunningWindowFunction") && !p.contains("Window "),
-      "band-key table must not be window-tagged")
-    assert(p.contains("BroadcastHashJoin"), "hot-key tag must broadcast")
+    // keys — a count().over(keys) window here shuffles every keyed row
+    // and cost q42/q43 2.4-3.2x at sf0.1 (round 3). Every Exact-mode
+    // BoundedPairs site carries the tag: LSH bands, SimHash buckets,
+    // fuzzy-name blocks.
+    for (q <- Seq("q42_lsh_pairs", "q63_simhash_neardup", "q195_fuzzy_match")) {
+      val p = plan(q)
+      assert(!p.contains("RunningWindowFunction") && !p.contains("Window "),
+        s"$q: keyed table must not be window-tagged")
+      assert(p.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftOuter")),
+        s"$q: hot-key tag must be a broadcast join\n$p")
+    }
   }
 
   test("bloom probe broadcasts the positions set, never the corpus") {

@@ -541,6 +541,43 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("bounded pairs: Exact is within-key all-pairs, Cells a subset, Long and String ids") {
+    import graft.operators.BoundedPairs
+    import graft.operators.BoundedPairs.{Cells, Exact}
+    // key 0 holds 6-12 rows, above the lowered hot threshold of 5, so
+    // its pairs come from the shard-block join; keys 1..n stay cold
+    val keyedGen: Gen[Seq[(Int, Long)]] = for {
+      nk <- Gen.chooseNum(1, 4)
+      sizes <- Gen.sequence[List[Int], Int](
+        Gen.chooseNum(6, 12) +: List.fill(nk)(Gen.chooseNum(1, 5)))
+      ids <- Gen.sequence[List[Seq[Long]], Seq[Long]](sizes.map(Gen.pick(_, 1L to 40L).map(_.toSeq)))
+    } yield ids.zipWithIndex.flatMap { case (is, k) => is.map(k -> _) }
+    def pad(x: Long) = f"$x%04d"
+    type P = (Int, String, Long, Long, Long, Long)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[P] =
+      df.collect().map(r => (r.getInt(0), r.getString(1), r.get(2).toString.toLong,
+        r.get(3).toString.toLong, r.getLong(4), r.getLong(5))).toSeq.sorted
+    forSamples(keyedGen, 6) { rowsIn =>
+      // two key columns and a carried column that names its own row
+      val v = (k: Int, id: Long) => k * 1000L + id
+      val want = rowsIn.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
+        rs.map(_._2).sorted.combinations(2).map { case Seq(a, b) =>
+          (k / 2, s"h${k % 2}", a, b, v(k, a), v(k, b)) }
+      }.sorted
+      val largest = rowsIn.groupBy(_._1).values.map(_.size).max.toLong
+      val frame = rowsIn.map { case (k, id) => (k / 2, s"h${k % 2}", id, v(k, id)) }
+      for (df <- Seq(frame.toDF("g", "h", "id", "v"),
+          frame.map { case (g, h, id, c) => (g, h, pad(id), c) }.toDF("g", "h", "id", "v"))) {
+        def run(mode: BoundedPairs.Mode) = rows(BoundedPairs(df, Seq("g", "h"), "id", Seq("v"), mode))
+        val exact = run(Exact(hotThreshold = 5, shards = 3))
+        assert(exact == want, s"rows=$rowsIn")
+        assert(run(Cells(largest)) == exact, s"rows=$rowsIn")
+        val small = run(Cells(2))
+        assert(small.distinct == small && small.toSet.subsetOf(exact.toSet), s"rows=$rowsIn")
+      }
+    }
+  }
+
   test("deep iterative graph runs keep a bounded plan (lineage cut every k rounds)") {
     import graft.operators.{Fixpoint, Graphs}
     val n = 20L

@@ -105,7 +105,7 @@ class TextAndMultimodalSpec extends AnyFunSuite {
   }
 
   test("LSH skew guard: blocked self-join emits identical pairs on a 50%-duplicate corpus") {
-    import graft.operators.Dedup
+    import graft.operators.{BoundedPairs, Dedup}
     // pathological: half the corpus is one identical document, so one
     // band key holds 20 members and would funnel all 190 pairs through
     // a single reducer without the guard
@@ -115,8 +115,8 @@ class TextAndMultimodalSpec extends AnyFunSuite {
     val bk = Dedup.bandKeysFrom(Dedup.hashedFromDocs(docs))
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val plain = pairs(Dedup.lshPairsFrom(bk, hotThreshold = Long.MaxValue))
-    val guarded = pairs(Dedup.lshPairsFrom(bk, hotThreshold = 2, shards = 3))
+    val plain = pairs(Dedup.lshPairsFrom(bk, BoundedPairs.Exact(hotThreshold = Long.MaxValue)))
+    val guarded = pairs(Dedup.lshPairsFrom(bk, BoundedPairs.Exact(hotThreshold = 2, shards = 3)))
     assert(plain == guarded)
     // the duplicate block really is all-pairs: C(20,2) pairs present
     assert((1L to 20L).combinations(2).forall(p => plain((p(0), p(1)))))

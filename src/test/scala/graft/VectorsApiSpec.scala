@@ -45,6 +45,17 @@ class VectorsApiSpec extends AnyFunSuite {
     val split = Vectors.nearDupPairs(emb, minCos = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact == split, "cell split changed output despite B = 1 everywhere")
+    // exact mode is the BoundedPairs Exact self-join: with every bucket
+    // forced hot, the block join (ids and embeddings swapped together)
+    // yields the same pairs and cosines
+    import graft.operators.BoundedPairs
+    val blocked = BoundedPairs(Vectors.hyperplaneBuckets(emb), Seq("bucket"), "vec_id",
+        Seq("embedding"), BoundedPairs.Exact(hotThreshold = 2, shards = 3))
+      .select(col("vec_id_a"), col("vec_id_b"),
+        round(Vectors.cosine("embedding_a", "embedding_b"), 6).as("cos_sim"))
+      .filter(col("cos_sim") >= 0.3)
+    assert(blocked.collect().map(_.toSeq).toSet ==
+      Vectors.nearDupPairs(emb, minCos = 0.3, cellTarget = None).collect().map(_.toSeq).toSet)
     val audit = Vectors.nearDupCellAudit(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(audit.nonEmpty)
